@@ -480,13 +480,10 @@ def main() -> None:
     # at ~35 chars each plus framing; trimmed further if a pathological
     # run produces very long entries).
     slow = sorted(times.items(), key=lambda kv: -kv[1])[:20]
-    while slow:
-        top_line = json.dumps(
-            {"metric": "headline_slowest", "top": dict(slow)}
-        )
-        if len(top_line) <= 1200:
-            break
-        slow = slow[:-2]
+    top_line = json.dumps({"metric": "headline_slowest", "top": dict(slow)})
+    while len(top_line) > 1200:
+        slow = slow[:-1]
+        top_line = json.dumps({"metric": "headline_slowest", "top": dict(slow)})
     print(top_line)
     # The grading driver archives only a bounded TAIL of stdout (~2000
     # chars) and parses the last complete JSON line it finds. The full

@@ -21,7 +21,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .sources.sinks import upsert_append
+from .sources.sinks import BucketedUpsertSink, upsert_append
 
 # Example config: the fixture event log with reference-style derivations
 # (rename map, declared dtypes, derived hit id + day bucket).
@@ -43,18 +43,54 @@ EXAMPLE_CONFIG: dict = {
 }
 
 
+# SyncPipeline._hwm before the target's high-water mark has been read
+_UNREAD = object()
+
+
 @dataclass
 class SyncPipeline:
     """Config-driven incremental sync: the reference's ``.sync()``.
 
     ``config`` follows :data:`EXAMPLE_CONFIG`. The target is a parquet
     path (production: a lakehouse table; same plan with MERGE INTO).
+
+    Run-scoped state: the pipeline owns one :class:`BucketedUpsertSink`
+    for its target, so the target is probed and its schema inferred
+    once, and it keeps the target's high-water mark (HWM). The first
+    sync reads the HWM from the target; each later sync advances it to
+    the max watermark of the rows it offered, which the sink takes in
+    the job that already finds the touched buckets. That is exact: a
+    row the anti-join drops is already in the target, so it is never
+    above the old HWM. ``backfill()``, an append to a flat (unbucketed)
+    target and a failed sync drop this state, and the next sync reads
+    the target again.
+
+    PRECONDITION — single writer: while a pipeline lives, it must be its
+    target's only writer. A target replaced or trimmed by anything else
+    leaves a cached HWM above the true one, and the next sync would skip
+    the rows in between (and a target created by anything else would be
+    appended to without the anti-join). After any outside write, call
+    :meth:`backfill` or use a new pipeline.
     """
 
     spark: SparkSession
     config: dict
     target_path: str
     _runs: list[int] = field(default_factory=list)
+    _sink: BucketedUpsertSink = field(init=False, repr=False)
+    _hwm: object = field(default=_UNREAD, init=False, repr=False)
+
+    def __post_init__(self) -> None:
+        self._sink = BucketedUpsertSink(
+            self.target_path,
+            self.config["key"],
+            watermark_col=self.config["watermark_col"],
+        )
+
+    def _forget(self) -> None:
+        """Drop the cached HWM and sink state; the next sync re-probes."""
+        self._hwm = _UNREAD
+        self._sink.invalidate()
 
     # -- the transform surface (EP1' steps 3-4) --------------------------
 
@@ -93,26 +129,42 @@ class SyncPipeline:
         Returns appended row count. Idempotent: re-running appends 0.
         """
         staged = self.project(source)
-        hwm = self.high_water_mark()
-        if hwm is not None:
-            cutoff = F.lit(hwm).cast("timestamp_ntz") - F.expr(
-                f"INTERVAL {reextract_overlap}"
+        try:
+            if self._hwm is _UNREAD:
+                self._hwm = self.high_water_mark()
+            hwm = self._hwm
+            if hwm is not None:
+                cutoff = F.lit(hwm).cast("timestamp_ntz") - F.expr(
+                    f"INTERVAL {reextract_overlap}"
+                )
+                staged = staged.where(F.col(self.config["watermark_col"]) > cutoff)
+            n = upsert_append(
+                self.spark, staged, self.target_path, self.config["key"],
+                sink=self._sink,
             )
-            staged = staged.where(F.col(self.config["watermark_col"]) > cutoff)
-        n = upsert_append(self.spark, staged, self.target_path, self.config["key"])
+        except BaseException:
+            self._forget()
+            raise
+        seen = self._sink.incoming_max
+        if not self._sink.incoming_max_known:  # flat target: not measured
+            self._forget()
+        elif seen is not None:
+            self._hwm = seen if hwm is None else max(hwm, seen)
         self._runs.append(n)
         return n
 
     def backfill(self, source: DataFrame) -> int:
         """EP2': full reload — overwrite the target from scratch."""
+        self._forget()
         staged = self.project(source)
         staged.write.mode("overwrite").parquet(self.target_path)
         return staged.count()
 
     def target(self) -> DataFrame:
-        # drop the sink's internal hash-bucket partition column (no-op
-        # for flat/backfilled targets)
-        return self.spark.read.parquet(self.target_path).drop("bucket")
+        # read with the sink's cached schema (no footer-inference job
+        # after the first read); drop its internal hash-bucket partition
+        # column (no-op for flat/backfilled targets)
+        return self._sink.read_target(self.spark).drop("bucket")
 
 
 @dataclass
