@@ -14,7 +14,11 @@ stage unrecoverable mid-query.
 can flip it) routes every such materialization through reliable
 ``DataFrame.checkpoint()`` instead, writing to the context's checkpoint
 dir — ``$SPARK_GRAFT_CKPT_DIR`` or ``.scratch/reliable_ckpt`` by default;
-a cluster deployment points it at HDFS/object storage. The materialized
+a cluster deployment points it at HDFS/object storage. ``get_spark`` sets
+``spark.cleaner.referenceTracking.cleanCheckpoints``, so a reliable
+checkpoint's files are deleted once its frame is garbage-collected: a
+looped key's superseded rounds do not pile up there (pinned by
+tests/test_materialize.py). The materialized
 frames are all metadata-grain (bounded pair lists, signature slices,
 <= pool² rows — SCALE.md "Materialized-stage bounds"), so the write cost
 is bounded; correctness of both paths is pinned by

@@ -205,12 +205,34 @@ SELECT doc_a, doc_b, jaccard FROM verified WHERE jaccard >= 0.5
 """
 
 
-def _minhash_parts(spark: SparkSession, sf_dir: str) -> dict:
-    """MinHash-LSH building blocks over the documents corpus with its
-    planted duplicated tail: ``scored`` = every LSH candidate pair with
-    its exact hashed-shingle Jaccard (unfiltered), ``hsig`` = per-doc
-    distinct 32-bit shingle-hash sets. Shared by x_dedup_near,
-    x_dedup_near_survivors, and the x_dedup_eval accuracy composite."""
+# exact hashed-shingle Jaccard of a candidate row's (sh_a, sh_b) sets,
+# rounded as every dedup consumer and its oracle compare it. The sets
+# are array_distinct output, so |A∪B| = |A| + |B| − |A∩B| exactly: one
+# per-row set op instead of two in the verification hot loop (measured
+# 2× on the filter stage). Same IEEE value as the two-op form — int
+# division either way — so every consumer's oracle hash is unchanged.
+JACCARD_SQL = (
+    "round(size(array_intersect(sh_a, sh_b)) / (size(sh_a) + size(sh_b)"
+    " - size(array_intersect(sh_a, sh_b))), 6)"
+)
+
+
+# the 16 signatures of :func:`_minhash_signed`'s frame as one array
+SIG_ARRAY_SQL = "array(" + ", ".join(f"sig{i}" for i in range(N_MINHASH)) + ")"
+
+
+def _minhash_signed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-doc MinHash signatures over the documents corpus with its
+    planted duplicated tail: ``doc_id``, ``h1s`` (the 32-bit shingle
+    hashes) and the 16 signatures ``sig0`` … ``sig15``, over one eagerly
+    materialized hash stage. x_lsh_tuning reads only this; every other
+    consumer goes through :func:`_minhash_parts`.
+
+    Every per-element projection below is a SQL expression string: a
+    Python lambda in ``F.transform``/``F.zip_with`` costs a Py4J round
+    trip per column node it builds (~30 ms per signature, against
+    ~0.65 ms for the same ``F.expr``), and Catalyst compiles both forms
+    to the same plan."""
     d = load(spark, sf_dir, "documents")
     # inject a duplicated tail so near-dup pairs exist at every sf
     # contiguous-from-0 ids: filter instead of a global orderBy+limit
@@ -236,9 +258,8 @@ def _minhash_parts(spark: SparkSession, sf_dir: str) -> dict:
     # materialize the md5 array ONCE, then derive both halves from it —
     # inlining the transform into two projections would hash every
     # shingle twice (CSE across sibling array lambdas is not guaranteed)
-    md5d = docs.select(
-        "doc_id",
-        F.transform("shingles", lambda s: F.md5(s.cast("binary"))).alias("md5s"),
+    md5d = docs.selectExpr(
+        "doc_id", "transform(shingles, s -> md5(CAST(s AS BINARY))) AS md5s"
     )
     # Materialized ONCE (eager localCheckpoint): three plan branches
     # consume this stage (band signatures + both sides of the
@@ -249,42 +270,47 @@ def _minhash_parts(spark: SparkSession, sf_dir: str) -> dict:
     # measured multi-second on the x_dedup_clusters loop (same
     # pathology, same fix), while the checkpointed form is compact
     # (doc_id, two long arrays — no text) and ContextCleaner-released.
-    hashed = md5d.select(
+    hashed = md5d.selectExpr(
         "doc_id",
-        F.transform(
-            "md5s", lambda m: F.conv(F.substring(m, 1, 8), 16, 10).cast("long")
-        ).alias("h1s"),
-        F.transform(
-            "md5s", lambda m: F.conv(F.substring(m, 9, 8), 16, 10).cast("long")
-        ).alias("h2s"),
-    ).materialize(eager=True)
-    # NB: the loop variable must be captured via a factory, not a default
-    # arg — PySpark counts lambda params, and a 2-param transform lambda
-    # binds the second to the ELEMENT INDEX (and zip_with rejects 3).
-    def _sig(i: int):
-        return F.array_min(
-            F.zip_with("h1s", "h2s", lambda a, b: a + F.lit(i) * b)
-        ).alias(f"sig{i}")
-
-    sigs = [_sig(i) for i in range(N_MINHASH)]
-    signed = hashed.select("doc_id", "h1s", *sigs)
-    bands = F.array(
         *[
-            F.concat_ws(
-                ":",
-                *[
-                    F.col(f"sig{b * LSH_ROWS + r}").cast("string")
-                    for r in range(LSH_ROWS)
-                ],
-            )
-            for b in range(LSH_BANDS)
-        ]
+            f"transform(md5s, m -> CAST(conv(substring(m, {start}, 8), 16, 10)"
+            f" AS BIGINT)) AS {name}"
+            for name, start in (("h1s", 1), ("h2s", 9))
+        ],
+    ).materialize(eager=True)
+    return hashed.selectExpr(
+        "doc_id",
+        "h1s",
+        *[
+            f"array_min(zip_with(h1s, h2s, (a, b) -> a + {i} * b)) AS sig{i}"
+            for i in range(N_MINHASH)
+        ],
+    )
+
+
+def _minhash_parts(spark: SparkSession, sf_dir: str) -> dict:
+    """MinHash-LSH building blocks over :func:`_minhash_signed`:
+    ``pairs`` = every distinct 4×4-band LSH candidate pair
+    (doc_a < doc_b), ``scored`` = those pairs with their exact
+    hashed-shingle Jaccard (unfiltered), ``hsig`` = per-doc distinct
+    32-bit shingle-hash sets, ``signed`` = the signature frame. Shared
+    by x_dedup_near, x_dedup_near_survivors and the x_dedup_eval
+    accuracy composite."""
+    signed = _minhash_signed(spark, sf_dir)
+    # band b's bucket key: its LSH_ROWS signatures joined with ':'
+    bands = ", ".join(
+        "concat_ws(':', "
+        + ", ".join(
+            f"CAST(sig{b * LSH_ROWS + r} AS STRING)" for r in range(LSH_ROWS)
+        )
+        + ")"
+        for b in range(LSH_BANDS)
     )
     # Band join carries only (band, bucket, doc_id) — the shingle arrays
     # (the heavy payload) never enter this shuffle; they are joined back
     # onto the (few) surviving candidate pairs for exact verification.
-    buckets = signed.select(
-        "doc_id", F.posexplode(bands).alias("band", "bucket")
+    buckets = signed.selectExpr(
+        "doc_id", f"posexplode(array({bands})) AS (band, bucket)"
     )
     # Bucket discipline (guide §2.3/§3): aggregate each (band, bucket)
     # to its member list ONCE and generate candidate pairs inside the
@@ -294,10 +320,10 @@ def _minhash_parts(spark: SparkSession, sf_dir: str) -> dict:
     pairs = (
         buckets.groupBy("band", "bucket")
         .agg(F.collect_list("doc_id").alias("ids"))
-        .where(F.size("ids") >= 2)
-        .select(F.explode("ids").alias("doc_a"), "ids")
-        .select("doc_a", F.explode("ids").alias("doc_b"))
-        .where(F.col("doc_a") < F.col("doc_b"))
+        .where("size(ids) >= 2")
+        .selectExpr("explode(ids) AS doc_a", "ids")
+        .selectExpr("doc_a", "explode(ids) AS doc_b")
+        .where("doc_a < doc_b")
         .dropDuplicates(["doc_a", "doc_b"])
     )
     # Verification compares 32-bit hashed shingle SETS, not the strings:
@@ -305,22 +331,15 @@ def _minhash_parts(spark: SparkSession, sf_dir: str) -> dict:
     # ~20-char gram, and long-array intersection beats string-array
     # intersection. Jaccard over hash sets equals shingle Jaccard up to
     # collisions (~|shingles|/2³² — immaterial and deterministic).
-    hsig = hashed.select("doc_id", F.array_distinct("h1s").alias("hsig"))
-    s1 = hsig.select(F.col("doc_id").alias("doc_a"), F.col("hsig").alias("sh_a"))
-    s2 = hsig.select(F.col("doc_id").alias("doc_b"), F.col("hsig").alias("sh_b"))
-    # |A∪B| = |A| + |B| − |A∩B| exactly (hsig is array_distinct output):
-    # one per-row set op instead of two in the verification hot loop,
-    # measured 2× on the filter stage. Same IEEE value — int division
-    # either way, so every consumer's oracle hash is unchanged.
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    jaccard = inter / (F.size("sh_a") + F.size("sh_b") - inter)
+    hsig = signed.selectExpr("doc_id", "array_distinct(h1s) AS hsig")
+    s1 = hsig.selectExpr("doc_id AS doc_a", "hsig AS sh_a")
+    s2 = hsig.selectExpr("doc_id AS doc_b", "hsig AS sh_b")
     scored = (
         pairs.join(s1, "doc_a")
         .join(s2, "doc_b")
-        .withColumn("jaccard", F.round(jaccard, 6))
-        .select("doc_a", "doc_b", "jaccard")
+        .selectExpr("doc_a", "doc_b", f"{JACCARD_SQL} AS jaccard")
     )
-    return {"scored": scored, "hsig": hsig, "signed": signed}
+    return {"pairs": pairs, "scored": scored, "hsig": hsig, "signed": signed}
 
 
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -288,71 +288,64 @@ def x_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     verification) and recall against blocked truth.
 
     Scale: reuses the banded-LSH plan (bucket-keyed shuffle, pair
-    space never n²); the truth side is the same inverted-index join
-    every dedup pass builds, df-capped to stay sparse.
+    space never n²); the truth side is the same inverted-index
+    aggregate every dedup pass builds, df-capped to stay sparse. The
+    two candidate sets are unioned and flagged, so each pair is
+    verified once and one aggregate yields all four counts.
     """
-    from .extensions import _minhash_parts
+    from .extensions import JACCARD_SQL, _minhash_parts
 
     parts = _minhash_parts(spark, sf_dir)
-    scored, hsig = parts["scored"], parts["hsig"]
+    hsig = parts["hsig"]
 
     # Bucket discipline (guide §2.3/§3, the x_semdedup_incremental
     # pattern): aggregate the inverted index to (h, [doc ids]) ONCE and
     # generate candidate pairs INSIDE each df-capped bucket row. The
-    # pair space is identical — every unordered pair sharing a hash
-    # with 2 <= df <= 20 (size(ids) == the old COUNT(*) df because
-    # collect_list keeps multiplicity) — but the exploded index is
-    # shuffled once (this groupBy) instead of three times (the old df
-    # aggregate plus BOTH sides of the e1 ⋈ e2 join); per-bucket pair
-    # fan-out is bounded by the same df cap (<= 20·19/2 rows).
-    e = hsig.select("doc_id", F.explode("hsig").alias("h"))
-    bucket = (
-        e.groupBy("h")
+    # pair space is every unordered pair sharing a hash with
+    # 2 <= df <= 20 (size(ids) == COUNT(*) df because collect_list keeps
+    # multiplicity); per-bucket fan-out is <= 20·19/2 rows.
+    blk = (
+        hsig.selectExpr("doc_id", "explode(hsig) AS h")
+        .groupBy("h")
         .agg(F.collect_list("doc_id").alias("ids"))
-        .where((F.size("ids") >= 2) & (F.size("ids") <= 20))
+        .where("size(ids) BETWEEN 2 AND 20")
+        .selectExpr("explode(ids) AS doc_a", "ids")
+        .selectExpr("doc_a", "explode(ids) AS doc_b")
+        .where("doc_a < doc_b")
     )
-    tcand = (
-        bucket.select(F.explode("ids").alias("doc_a"), "ids")
-        .select("doc_a", F.explode("ids").alias("doc_b"))
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
+    # One row per pair, flagged by the set(s) it came from. Repartitioned
+    # to the session parallelism (the x_containment shape): the pair
+    # frame is a few MB of keys, so AQE would coalesce the set-op stage
+    # to one task and the per-pair set op below would run
+    # single-threaded. Hash-partitioning on the group key lets the
+    # aggregate reuse this exchange.
+    cand = (
+        parts["pairs"]
+        .selectExpr("doc_a", "doc_b", "true AS lsh", "false AS blk")
+        .unionByName(blk.selectExpr("doc_a", "doc_b", "false AS lsh", "true AS blk"))
+        .repartition(spark.sparkContext.defaultParallelism, "doc_a", "doc_b")
+        .groupBy("doc_a", "doc_b")
+        .agg(F.bool_or("lsh").alias("lsh"), F.bool_or("blk").alias("blk"))
     )
-    s1 = hsig.select(F.col("doc_id").alias("doc_a"), F.col("hsig").alias("sh_a"))
-    s2 = hsig.select(F.col("doc_id").alias("doc_b"), F.col("hsig").alias("sh_b"))
-    # |A∪B| = |A| + |B| − |A∩B| exactly (hsig is array_distinct output),
-    # so the verification pays ONE per-row set op instead of two —
-    # measured 2× on this filter, which is the truth side's hot loop.
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = F.round(inter / (F.size("sh_a") + F.size("sh_b") - inter), 6)
-    truth = (
-        tcand.join(s1, "doc_a")
-        .join(s2, "doc_b")
-        .where(jac >= 0.5)
-        .select("doc_a", "doc_b")
-        .materialize(eager=True)
-    )
-    scored = scored.materialize(eager=True)
-    lsh_pos = scored.where(F.col("jaccard") >= 0.5).select("doc_a", "doc_b")
-    n_cand = scored.agg(F.count(F.lit(1)).alias("n_candidates"))
-    n_pos = lsh_pos.agg(F.count(F.lit(1)).alias("n_positive"))
-    n_truth = truth.agg(F.count(F.lit(1)).alias("n_truth"))
-    n_hit = lsh_pos.join(F.broadcast(truth), ["doc_a", "doc_b"]).agg(
-        F.count(F.lit(1)).alias("n_hit")
-    )
+    s1 = hsig.selectExpr("doc_id AS doc_a", "hsig AS sh_a")
+    s2 = hsig.selectExpr("doc_id AS doc_b", "hsig AS sh_b")
     return (
-        n_cand.crossJoin(n_pos)
-        .crossJoin(n_truth)
-        .crossJoin(n_hit)
-        .select(
+        cand.join(s1, "doc_a")
+        .join(s2, "doc_b")
+        .selectExpr("lsh", "blk", f"{JACCARD_SQL} >= 0.5 AS pos")
+        .selectExpr(
+            "count_if(lsh) AS n_candidates",
+            "count_if(lsh AND pos) AS n_positive",
+            "count_if(blk AND pos) AS n_truth",
+            "count_if(lsh AND blk AND pos) AS n_hit",
+        )
+        .selectExpr(
             "n_candidates",
             "n_positive",
             "n_truth",
             "n_hit",
-            (F.col("n_positive").cast("double") / F.col("n_candidates")).alias(
-                "precision_cand"
-            ),
-            (F.col("n_hit").cast("double") / F.col("n_truth")).alias("recall"),
+            "CAST(n_positive AS DOUBLE) / n_candidates AS precision_cand",
+            "CAST(n_hit AS DOUBLE) / n_truth AS recall",
         )
     )
 

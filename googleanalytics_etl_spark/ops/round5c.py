@@ -230,9 +230,9 @@ def x_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # for row because the per-doc hash multiset is duplicate-free —
     # word_shingles emits array_distinct strings and no two of them
     # collide in the 60-bit hash (asserted by
-    # tests/test_round5c_ops.py::test_containment_shingle_hashes_collision_free,
-    # which runs only at sf0.001: sf0.01/sf0.1 are not re-checked by
-    # the suite, and a collision there would shift n_common).
+    # tests/test_round5c_ops.py::test_containment_shingle_hashes_collision_free
+    # at every fixture scale present: sf0.001, sf0.01 and the sf0.1
+    # bench fixture; a collision would shift n_common).
     sets_ = sh.groupBy("doc_id").agg(
         F.collect_list("shingle").alias("shs"),
         F.count(F.lit(1)).cast("long").alias("n_sh"),

@@ -821,6 +821,14 @@ def s_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
         # so the final union evaluates every batch's dedup in one query
         # at full session parallelism, outside the stream's bounded
         # shuffle-partition conf.
+        # Broadcast bounds (per micro-batch B, k = the largest number of
+        # accumulated docs in one (band, bucket)):
+        #   nb      ≤ |B| × 4 bands rows of (id, band, ~40-char bucket);
+        #   cand    ≤ |B| × 4 bands × k distinct (new_id, old_id) pairs;
+        #   s1⋈cand = cand's rows, each carrying the new doc's hash set;
+        #   dropped ≤ |B| doc ids.
+        # None grows with the corpus except through k: a hot bucket
+        # (templated boilerplate) grows cand with the accumulated index.
         cand = (
             old_bands.join(F.broadcast(nb), ["band", "bucket"])
             .where(F.col("old_id") < F.col("new_id"))

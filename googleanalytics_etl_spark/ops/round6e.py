@@ -17,15 +17,15 @@ x_dedup_threshold_curve).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
 
 # (bands, rows) shapes over the 16 shared signatures. A pair matching a
 # b-band of r rows matches each of that band's single rows, so the
-# (16, 1) candidate set is a SUPERSET of every other shape — its
-# verified yield is the recall denominator.
+# (16, 1) candidate set — the last shape — is a SUPERSET of every other
+# shape: its verified yield is the recall denominator.
 _SHAPES = ((4, 4), (8, 2), (16, 1))
 
 
@@ -84,10 +84,24 @@ FROM stats s, denom d
 """
 
 
+def _band_match_sql(b: int, r: int) -> str:
+    """True when the pair (sg_a, sg_b) shares some (b × r) band: all r
+    rows of that band equal. ``<=>`` makes two null signatures equal,
+    exactly as their ``concat_ws`` band strings ('' and '') collide."""
+    return " OR ".join(
+        "("
+        + " AND ".join(
+            f"sg_a[{band * r + i}] <=> sg_b[{band * r + i}]" for i in range(r)
+        )
+        + ")"
+        for band in range(b)
+    )
+
+
 @register("x_lsh_tuning", oracle=_lsh_tuning_oracle())
 def x_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH banding sweep: the shared 16-signature frame
-    (``_minhash_parts`` — computed ONCE, eagerly checkpointed)
+    (``_minhash_signed`` — computed ONCE, eagerly checkpointed)
     re-banded at
     {shapes}; per shape, candidate volume, verified-pair yield
     (hash-set Jaccard ≥ 0.5), precision, and recall against the
@@ -96,101 +110,76 @@ def x_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall); single-row bands → every signature collision becomes a
     candidate (full recall at this threshold, worst candidate bill).
 
-    Scale shape: the signature stage is the exact x_dedup_near plan
-    (the materialized (doc_id, arrays) frame feeds all three shapes — the
-    shingle/md5 pipeline runs once); each shape's band join carries
-    only (band, bucket, doc_id); verification joins the slim hash-set
-    frame onto candidates only. The three shapes share every scan. At
+    Scale shape: the signature stage is the exact x_dedup_near plan.
+    Only the (16 × 1) superset is generated — one band self-join over
+    (band, signature, doc_id) — and verified once: one join carries
+    each doc's hash set and signature array onto the candidates, each
+    pair's (8 × 2) and (4 × 4) membership is read off its two
+    signature vectors, and one aggregate counts all three shapes. At
     100 TB you run this on a ~0.1% hash-sampled slice — the S-curve is
     a ratio estimate, sample-stable — before committing the full run
     to one banding.
     """
-    from .extensions import _minhash_parts
+    from .extensions import JACCARD_SQL, SIG_ARRAY_SQL, _minhash_signed
 
-    parts = _minhash_parts(spark, sf_dir)
-    signed = parts["signed"]
-    hsig = parts["hsig"]
-    s1 = hsig.select(
-        F.col("doc_id").alias("doc_a"), F.col("hsig").alias("sh_a")
+    signed = _minhash_signed(spark, sf_dir)
+    # (16 × 1) buckets: a single-row band's key is its signature.
+    # NOT the bucket-aggregate pair generation used elsewhere (probed
+    # in round 13: 3.2 s → 6.7 s): single-signature buckets run HOT
+    # (common shingles pull many docs to one min value), and the in-row
+    # double explode copies the k-member array per generated row —
+    # O(k³) bytes on a hot bucket. The self-join streams the probe side
+    # instead, which is the right shape when buckets can be large.
+    buckets = signed.selectExpr(
+        "doc_id", f"posexplode({SIG_ARRAY_SQL}) AS (band, bucket)"
     )
-    s2 = hsig.select(
-        F.col("doc_id").alias("doc_b"), F.col("hsig").alias("sh_b")
+    pa = buckets.selectExpr("band", "bucket", "doc_id AS doc_a")
+    pb = buckets.selectExpr(
+        "band AS band_b", "bucket AS bucket_b", "doc_id AS doc_b"
     )
-    # one set op per pair (|A∪B| = |A|+|B|−|A∩B|, exact on the distinct
-    # hash sets) — the shared _minhash_parts rewrite
-    _inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    jaccard = F.round(
-        _inter / (F.size("sh_a") + F.size("sh_b") - _inter), 6
+    # <=>: two null signatures share a bucket, as their '' keys did
+    on = F.expr("band = band_b AND bucket <=> bucket_b AND doc_a < doc_b")
+    pairs = (
+        pa.join(pb, on)
+        .select("doc_a", "doc_b")
+        .dropDuplicates(["doc_a", "doc_b"])
     )
-
-    def stat(b: int, r: int) -> DataFrame:
-        bands = F.array(
-            *[
-                F.concat_ws(
-                    ":",
-                    *[
-                        F.col(f"sig{band * r + i}").cast("string")
-                        for i in range(r)
-                    ],
-                )
-                for band in range(b)
-            ]
+    side = signed.selectExpr(
+        "doc_id", "array_distinct(h1s) AS hsig", f"{SIG_ARRAY_SQL} AS sg"
+    )
+    s1 = side.selectExpr("doc_id AS doc_a", "hsig AS sh_a", "sg AS sg_a")
+    s2 = side.selectExpr("doc_id AS doc_b", "hsig AS sh_b", "sg AS sg_b")
+    # A pair in some (b × r) band shares each of that band's single
+    # rows, so every shape's candidates are flagged subsets of the
+    # (16 × 1) superset. n_verified stays NULL for a shape with no
+    # candidates, as SUM over an empty per-shape join is.
+    flagged = (
+        pairs.join(s1, "doc_a")
+        .join(s2, "doc_b")
+        .selectExpr(
+            f"CAST({JACCARD_SQL} >= 0.5 AS INT) AS ver",
+            *[f"{_band_match_sql(b, r)} AS in_{b}" for b, r in _SHAPES[:-1]],
         )
-        buckets = signed.select(
-            "doc_id", F.posexplode(bands).alias("band", "bucket")
+    )
+    counts = ["count(1) AS c_16", "sum(ver) AS v_16"]
+    for b, _ in _SHAPES[:-1]:
+        counts += [f"count_if(in_{b}) AS c_{b}", f"sum(if(in_{b}, ver, NULL)) AS v_{b}"]
+    rows = ", ".join(
+        f"struct({b}L AS n_bands, {r}L AS n_rows, c_{b} AS n_candidates,"
+        f" v_{b} AS n_verified)"
+        for b, r in _SHAPES
+    )
+    return (
+        flagged.selectExpr(*counts)
+        .selectExpr(f"inline(array({rows}))", "v_16 AS v_total")
+        .selectExpr(
+            "n_bands",
+            "n_rows",
+            "n_candidates",
+            "n_verified",
+            "round(CAST(n_verified AS DOUBLE) / n_candidates, 6) AS precision_at_05",
+            "round(CAST(n_verified AS DOUBLE) / v_total, 6) AS recall_vs_max",
         )
-        # NOT the bucket-aggregate pair generation used elsewhere
-        # (probed in round 13: 3.2 s → 6.7 s): the (16 × 1) shape has
-        # HOT single-signature buckets (common shingles pull many docs
-        # to one min value), and the in-row double explode copies the
-        # k-member array per generated row — O(k³) bytes on a hot
-        # bucket. The self-join streams the probe side instead, which
-        # is the right shape when buckets can be large.
-        pa = buckets.select("band", "bucket", F.col("doc_id").alias("doc_a"))
-        pb = buckets.select("band", "bucket", F.col("doc_id").alias("doc_b"))
-        pairs = (
-            pa.join(pb, ["band", "bucket"])
-            .where(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b")
-            .dropDuplicates(["doc_a", "doc_b"])
-        )
-        return (
-            pairs.join(s1, "doc_a")
-            .join(s2, "doc_b")
-            .agg(
-                F.lit(b).cast("long").alias("n_bands"),
-                F.lit(r).cast("long").alias("n_rows"),
-                F.count(F.lit(1)).cast("long").alias("n_candidates"),
-                F.sum(F.when(jaccard >= 0.5, 1).otherwise(0))
-                .cast("long")
-                .alias("n_verified"),
-            )
-        )
-
-    stats = stat(*_SHAPES[0])
-    for shape in _SHAPES[1:]:
-        stats = stats.unionByName(stat(*shape))
-    # recall denominator = the (16 × 1) superset shape's verified count,
-    # read from the 3-row stats frame itself via a whole-frame window —
-    # no second stat(16, 1) subtree, no nested-loop join; the single
-    # partition holds exactly |shapes| metadata rows.
-    v_total = F.max(
-        F.when(
-            (F.col("n_bands") == 16) & (F.col("n_rows") == 1),
-            F.col("n_verified"),
-        )
-    ).over(Window.partitionBy(F.lit(1)))
-    return stats.withColumn("v_total", v_total).select(
-        "n_bands",
-        "n_rows",
-        "n_candidates",
-        "n_verified",
-        F.round(
-            F.col("n_verified").cast("double") / F.col("n_candidates"), 6
-        ).alias("precision_at_05"),
-        F.round(
-            F.col("n_verified").cast("double") / F.col("v_total"), 6
-        ).alias("recall_vs_max"),
     )
 
 

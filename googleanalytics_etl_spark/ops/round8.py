@@ -842,7 +842,16 @@ def s_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # the NEW side is batch-bounded — broadcast it so the standing
         # index is streamed, never shuffled (guide §3.1; at scale the
-        # accumulated index dwarfs a micro-batch).
+        # accumulated index dwarfs a micro-batch). Broadcast bounds (per
+        # micro-batch B, k = the largest number of accumulated vectors
+        # in one (band, key)):
+        #   nb          ≤ |B| × 4 bands rows of (id, band, key);
+        #   cand        ≤ |B| × 4 bands × k distinct (new_id, old_id) pairs;
+        #   s_new⋈cand  = cand's rows, each carrying a 64-d embedding;
+        #   dropped     ≤ |B| vector ids.
+        # A band has only 2⁴ = 16 keys, so k is about 1/16 of the
+        # accumulated store: cand, and the two hints above it, grow
+        # linearly with the corpus (SCALE.md).
         cand = (
             old_bands.join(F.broadcast(nb), ["band", "key"])
             .where(F.col("old_id") < F.col("new_id"))

@@ -50,6 +50,10 @@ def get_spark(app_name: str = "googleanalytics_etl_spark", cpus: int | None = No
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # delete a reliable checkpoint's files once its frame is
+        # garbage-collected (materialize.py, SPARK_GRAFT_RELIABLE_CKPT=1);
+        # without it every looped-key round leaves its directory behind
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -133,12 +133,10 @@ _BNLJ_OK = {
     # are metadata-scale by construction — BNLJ is the right plan there
     "x_sketch_hll_wau",
     "x_sketch_theta_overlap",
-    # the 5-row query panel broadcast (exact-vs-IVF audit), the
-    # 1×1×1 stats/edges/triangles crossJoins, and the dedup-eval
-    # 1×1×1×1 count assembly — bounded build sides
+    # the 5-row query panel broadcast (exact-vs-IVF audit) and the
+    # 1×1×1 stats/edges/triangles crossJoins — bounded build sides
     "x_ann_recall",
     "x_graph_triangles",
-    "x_dedup_eval",
     # 1-row total-count crossJoins (mixture rate table, MG threshold)
     # and the ≤8-row seed-centroid broadcast in the SemDeDup assignment
     "x_mixture_sample",

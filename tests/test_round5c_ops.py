@@ -4,6 +4,7 @@ verified heavy hitters — Python recounts + algorithmic-guarantee checks
 
 from __future__ import annotations
 
+import os
 from collections import Counter, defaultdict
 
 import pytest
@@ -142,17 +143,23 @@ def test_interval_merge_agrees_with_session_windows(spark):
         assert iv[uid]["covered_us"] == covered
 
 
-def test_containment_shingle_hashes_collision_free(spark):
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_containment_shingle_hashes_collision_free(spark, sf):
     """x_containment's n_common = size(array_intersect) equals the old
     join-count ONLY while no document carries two distinct shingles with
-    the same 60-bit md5-prefix hash. Pin that assumption against the
-    fixture: a fixture change that ever violated it must fail loudly
-    here, not silently shift n_common."""
+    the same 60-bit md5-prefix hash. Pin that assumption against every
+    fixture scale present (sf0.1 is the bench fixture): a fixture change
+    that ever violated it must fail loudly here, not silently shift
+    n_common."""
     from pyspark.sql import functions as F
 
     from googleanalytics_etl_spark.ops.extensions import word_shingles
 
-    d = load(spark, SF_SMALL, "documents")
+    # the fixture scales sit side by side under SF_SMALL's parent
+    sf_dir = os.path.join(os.path.dirname(SF_SMALL), sf)
+    if not os.path.exists(os.path.join(sf_dir, "documents.parquet")):
+        pytest.skip(f"{sf_dir} absent")
+    d = load(spark, sf_dir, "documents")
     words = F.split("text", " ")
     half = F.slice(
         words, 1, F.greatest(F.floor(F.size(words) / 2).cast("int"), F.lit(3))
