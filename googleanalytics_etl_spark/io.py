@@ -94,8 +94,3 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
             "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
         )
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every fixture table (used by the ETL facade and tests)."""
-    return {t: load(spark, sf_dir, t) for t in TABLES}

@@ -413,15 +413,9 @@ def s_exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     at-scale sink is bucketBy(h) parquet appends — a sink change, not a
     plan change (the x_semdedup_incremental shape).
     """
-    from .streaming import (
-        _sweep_runs,
-        bounded_stream_parts,
-        documents_stream,
-        stage_documents,
-    )
+    from .streaming import documents_stream, run_foreach_batch, stage_table
 
-    staged = stage_documents(spark, sf_dir, "xsub")
-    ckpt = _sweep_runs("exact_substring") / "ckpt"
+    staged = stage_table(spark, sf_dir, "xsub")
 
     occ_slices: list[DataFrame] = []
     stat_slices: list[DataFrame] = []
@@ -450,17 +444,7 @@ def s_exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # of under the stream's bounded shuffle conf (round-13 pattern).
         stat_slices.append(_gram_stats(occ))
 
-    with bounded_stream_parts(spark):
-        q = (
-            documents_stream(spark, staged)
-            .writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", str(ckpt))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    run_foreach_batch(documents_stream(spark, staged), fold_batch)
 
     stats = (
         reduce(lambda a, b: a.unionByName(b), stat_slices)

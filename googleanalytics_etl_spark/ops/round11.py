@@ -235,12 +235,7 @@ def s_decon_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     into every micro-batch plan (the round-11 probe fix), so the
     training stream never shuffles for the flag at any batch size.
     """
-    from .streaming import (
-        _sweep_runs,
-        bounded_stream_parts,
-        documents_stream,
-        stage_documents,
-    )
+    from .streaming import documents_stream, run_foreach_batch, stage_table
 
     d = load(spark, sf_dir, "documents").select("doc_id", "source", "text")
     bench_h = (
@@ -250,8 +245,7 @@ def s_decon_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .materialize(eager=True)  # built once, reused every batch
     )
 
-    staged = stage_documents(spark, sf_dir, "decon_gate")
-    ckpt = _sweep_runs("decon_gate") / "ckpt"
+    staged = stage_table(spark, sf_dir, "decon_gate")
     span_slices: list[DataFrame] = []
     seen_epochs: set[int] = set()
 
@@ -271,17 +265,7 @@ def s_decon_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         # is complete per arrival — emit, nothing retained
         span_slices.append(_merged_spans(dup).materialize(eager=True))
 
-    with bounded_stream_parts(spark):
-        q = (
-            documents_stream(spark, staged)
-            .writeStream.foreachBatch(gate_batch)
-            .option("checkpointLocation", str(ckpt))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    run_foreach_batch(documents_stream(spark, staged), gate_batch)
 
     return _union_spans(spark, span_slices)
 
@@ -560,32 +544,22 @@ def s_exact_substring_durable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .streaming import (
         _sweep_runs,
-        bounded_stream_parts,
         documents_stream,
-        stage_documents,
+        run_foreach_batch,
+        stage_table,
     )
 
-    staged = stage_documents(spark, sf_dir, "xsubd")
+    staged = stage_table(spark, sf_dir, "xsubd")
     run = _sweep_runs("exact_substring_durable")
-    ckpt = run / "ckpt"
     occ_dir = str(run / "occ")
     stat_dir = str(run / "stats")
     manifest = str(run / "compacted_epochs")
 
-    with bounded_stream_parts(spark):
-        q = (
-            documents_stream(spark, staged)
-            .writeStream.foreachBatch(
-                lambda batch_df, epoch_id: _durable_fold_batch(
-                    spark, occ_dir, stat_dir, manifest, batch_df, epoch_id
-                )
-            )
-            .option("checkpointLocation", str(ckpt))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    run_foreach_batch(
+        documents_stream(spark, staged),
+        lambda batch_df, epoch_id: _durable_fold_batch(
+            spark, occ_dir, stat_dir, manifest, batch_df, epoch_id
+        ),
+    )
 
     return merge_durable_store(spark, occ_dir, stat_dir)

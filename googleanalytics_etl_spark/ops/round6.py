@@ -685,59 +685,14 @@ def s_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     pays; swapping the slice store for bucketed parquet is a sink
     change, not a plan change.
     """
-    import hashlib
-    import os
-
     from .extensions import word_shingles
-    from .streaming import (
-        SCRATCH,
-        _sweep_runs,
-        bounded_stream_parts,
-        stage_atomic,
-        write_chunks_pinned,
-    )
+    from .streaming import documents_stream, run_foreach_batch, stage_table
 
-    ckpt = _sweep_runs("sdedup_near") / "ckpt"
-
-    # content-cached arrival staging (the _stage_events recipe): the 4
-    # doc_id-ordered chunks are pure scaffolding simulating the crawl's
-    # arrival order and depend only on the source file, so repeated
-    # invocations reuse them — the measured loop is the dedup itself,
-    # not re-writing the fixture
-    from pathlib import Path as _P
-
-    src = _P(sf_dir) / "documents.parquet"
-    st = os.stat(src)
-    fp = hashlib.md5(
-        f"{src.resolve()}|{st.st_size}|{st.st_mtime_ns}|4".encode()
-    ).hexdigest()[:16]
-    chunks = SCRATCH / "sdedup_stage" / f"{_P(sf_dir).name}_{fp}"
-
-    def _build(tmp) -> None:
-        d = load(spark, sf_dir, "documents")
-        tail = d.where(F.col("doc_id") < 10).withColumn(
-            "doc_id", F.col("doc_id") + 1_000_000
-        )
-        corpus = d.unionByName(tail).select(
-            "doc_id", "lang", "source", "n_chars", "text"
-        )
-        n = d.count()  # organic ids are contiguous from 0 at every SF
-        bounds = [0, n // 4, n // 2, (3 * n) // 4, None]
-        # pinned ascending mtimes: FileStreamSource orders by timestamp,
-        # and arrival order IS the dedup precedence (shared recipe)
-        write_chunks_pinned(
-            tmp,
-            [
-                corpus.where(
-                    (F.col("doc_id") >= lo)
-                    if hi is None
-                    else (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
-                )
-                for lo, hi in zip(bounds, bounds[1:])
-            ],
-        )
-
-    stage_atomic(chunks, _build)
+    # content-cached arrival staging: the 4 doc_id-ordered chunks plus a
+    # planted 10-doc duplicate tail simulate the crawl's arrival order
+    # and depend only on the source file, so repeated invocations reuse
+    # them — the measured loop is the dedup itself
+    staged = stage_table(spark, sf_dir, "sdedup", tail=10)
 
     # the accumulated index: unions of per-batch localCheckpointed
     # signature slices (each batch shingled exactly once, at arrival)
@@ -865,22 +820,7 @@ def s_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         acc["bands"], acc["hsets"] = old_bands, old_hsets
 
-    with bounded_stream_parts(spark):
-        q = (
-            spark.readStream.schema(
-                "doc_id bigint, lang string, source string, "
-                "n_chars bigint, text string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(chunks))
-            .writeStream.foreachBatch(dedup_batch)
-            .option("checkpointLocation", str(ckpt))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    run_foreach_batch(documents_stream(spark, staged), dedup_batch)
 
     if not survivors:  # staging raced/empty: fail loudly, not IndexError
         raise RuntimeError("s_dedup_near: no micro-batches fired")
@@ -1170,13 +1110,11 @@ def s_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         _events_stream,
         _stage_events,
         _sweep_runs,
-        bounded_stream_parts,
+        run_foreach_batch,
     )
 
     stage = _stage_events(spark, sf_dir)
-    run = _sweep_runs("psi_monitor")
-    state = run / "counts"
-    ckpt = run / "ckpt"
+    state = _sweep_runs("psi_monitor") / "counts"
 
     cut = F.lit("2024-01-16").cast("timestamp")
 
@@ -1207,17 +1145,7 @@ def s_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(str(state))
         )
 
-    with bounded_stream_parts(spark):
-        q = (
-            _events_stream(spark, stage)
-            .writeStream.foreachBatch(monitor_batch)
-            .option("checkpointLocation", str(ckpt))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    run_foreach_batch(_events_stream(spark, stage), monitor_batch)
 
     from .round5m import psi_from_counts
 

@@ -144,7 +144,7 @@ def s_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     from datetime import datetime
 
-    from .streaming import _events_stream, _sweep_runs, bounded_stream_parts
+    from .streaming import _events_stream, _sweep_runs, run_foreach_batch
 
     stage = _stage_with_replay(spark, sf_dir)
     run = _sweep_runs("late_audit")
@@ -191,17 +191,7 @@ def s_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         tmp_f.write_text(json.dumps({"max_ts": new_max.isoformat()}))
         os.replace(tmp_f, state_f)
 
-    with bounded_stream_parts(spark):
-        q = (
-            _events_stream(spark, stage)
-            .writeStream.foreachBatch(audit_batch)
-            .option("checkpointLocation", str(run / "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    run_foreach_batch(_events_stream(spark, stage), audit_batch)
 
     totals = (
         spark.read.parquet(str(partials))

@@ -168,11 +168,10 @@ def s_jdbc_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
     from ..sources.paged import read_paged_stream
-    from .streaming import _sweep_runs, bounded_stream_parts
+    from .streaming import run_foreach_batch
 
     name = f"sync_{_uuid.uuid4().hex[:12]}"
     url = _derby_url(name)
-    ckpt = _sweep_runs("jdbc_sync") / "ckpt"
 
     seed = _events_for_jdbc(spark, sf_dir).where(
         F.col("ts_us")
@@ -235,17 +234,9 @@ def s_jdbc_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             inc.unpersist()
 
-    with bounded_stream_parts(spark):
-        q = (
-            read_paged_stream(spark, sf_dir, chunks=5, parallel=True)
-            .writeStream.foreachBatch(sync_batch)
-            .option("checkpointLocation", str(ckpt))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    run_foreach_batch(
+        read_paged_stream(spark, sf_dir, chunks=5, parallel=True), sync_batch
+    )
 
     # read back as the q_jdbc_roundtrip partitioned range scan (8
     # executor-side range queries — the only viable shape for a big

@@ -244,18 +244,9 @@ def s_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded metadata, the bloom-manifest contract); per batch the
     register aggregate itself is distributed.
     """
-    from .streaming import (
-        _events_stream,
-        _stage_events,
-        _sweep_runs,
-        bounded_stream_parts,
-    )
+    from .streaming import _events_stream, _stage_events, run_foreach_batch
 
     stage = _stage_events(spark, sf_dir)
-    # checkpoint must be per-RUN, never inside the (content-cached,
-    # cross-invocation) stage dir — a reused checkpoint would replay
-    # zero batches and fold an empty sketch
-    ckpt = _sweep_runs("hll_merge") / "ckpt"
     state: dict[int, int] = {}
 
     hv = F.conv(
@@ -304,21 +295,7 @@ def s_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             reg, m_j = int(row["reg"]), int(row["m_j"])
             state[reg] = max(state.get(reg, 0), m_j)
 
-    # The per-batch fold aggregates to bounded metadata (<= sketch-size
-    # rows) but runs under the streaming conf, where AQE is disabled and
-    # shuffle partitions are taken literally: bound them for the run
-    # (state here is sketch-grain, nowhere near core-count partitions).
-    with bounded_stream_parts(spark):
-        q = (
-            _events_stream(spark, stage)
-            .writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", str(ckpt))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    run_foreach_batch(_events_stream(spark, stage), fold_batch)
 
     from decimal import Decimal
 

@@ -107,15 +107,9 @@ def s_kll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     event scan. At 100 TB the same fold runs per partition with no
     driver involvement (groupBy(bin) is already the merge).
     """
-    from .streaming import (
-        _events_stream,
-        _stage_events,
-        _sweep_runs,
-        bounded_stream_parts,
-    )
+    from .streaming import _events_stream, _stage_events, run_foreach_batch
 
     stage = _stage_events(spark, sf_dir)
-    ckpt = _sweep_runs("kll_merge") / "ckpt"
     state: dict[int, int] = {}
 
     bin_col = F.least(
@@ -133,21 +127,7 @@ def s_kll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             b = int(row["b"])
             state[b] = state.get(b, 0) + int(row["c"])
 
-    # The per-batch fold aggregates to bounded metadata (<= sketch-size
-    # rows) but runs under the streaming conf, where AQE is disabled and
-    # shuffle partitions are taken literally: bound them for the run
-    # (state here is sketch-grain, nowhere near core-count partitions).
-    with bounded_stream_parts(spark):
-        q = (
-            _events_stream(spark, stage)
-            .writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", str(ckpt))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    run_foreach_batch(_events_stream(spark, stage), fold_batch)
 
     import math
 
@@ -240,15 +220,9 @@ def s_theta_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     states also intersect, enabling sketch-space audience overlap
     (sketches.py theta_intersection_estimate).
     """
-    from .streaming import (
-        _events_stream,
-        _stage_events,
-        _sweep_runs,
-        bounded_stream_parts,
-    )
+    from .streaming import _events_stream, _stage_events, run_foreach_batch
 
     stage = _stage_events(spark, sf_dir)
-    ckpt = _sweep_runs("theta_merge") / "ckpt"
     state: set[int] = set()
 
     hv = F.conv(
@@ -278,21 +252,7 @@ def s_theta_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             for h in sorted(state)[_KMV_K:]:
                 state.discard(h)
 
-    # The per-batch fold aggregates to bounded metadata (<= sketch-size
-    # rows) but runs under the streaming conf, where AQE is disabled and
-    # shuffle partitions are taken literally: bound them for the run
-    # (state here is sketch-grain, nowhere near core-count partitions).
-    with bounded_stream_parts(spark):
-        q = (
-            _events_stream(spark, stage)
-            .writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", str(ckpt))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    run_foreach_batch(_events_stream(spark, stage), fold_batch)
 
     bot = sorted(state)[:_KMV_K]
     seen = len(bot)
@@ -511,15 +471,9 @@ def s_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold.
     """
     from .extensions import _CM_D, _CM_W
-    from .streaming import (
-        _events_stream,
-        _stage_events,
-        _sweep_runs,
-        bounded_stream_parts,
-    )
+    from .streaming import _events_stream, _stage_events, run_foreach_batch
 
     stage = _stage_events(spark, sf_dir)
-    ckpt = _sweep_runs("cm_merge") / "ckpt"
     state: dict[tuple[int, int], int] = {}
 
     i = F.explode(F.array(*[F.lit(k) for k in range(_CM_D)])).alias("i")
@@ -553,21 +507,7 @@ def s_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             key = (int(r["i"]), int(r["bucket"]))
             state[key] = state.get(key, 0) + int(r["n"])
 
-    # The per-batch fold aggregates to bounded metadata (<= sketch-size
-    # rows) but runs under the streaming conf, where AQE is disabled and
-    # shuffle partitions are taken literally: bound them for the run
-    # (state here is sketch-grain, nowhere near core-count partitions).
-    with bounded_stream_parts(spark):
-        q = (
-            _events_stream(spark, stage)
-            .writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", str(ckpt))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    run_foreach_batch(_events_stream(spark, stage), fold_batch)
 
     counters = spark.createDataFrame(
         [(ik, bk, n) for (ik, bk), n in state.items()],
@@ -754,48 +694,13 @@ def s_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale: bucketBy(band, key) parquet for an exchange-free candidate
     join).
     """
-    import hashlib
-    import os
-    from pathlib import Path as _P
+    from .streaming import run_foreach_batch, stage_table
 
-    from .streaming import (
-        SCRATCH,
-        _sweep_runs,
-        bounded_stream_parts,
-        stage_atomic,
-        write_chunks_pinned,
+    # 4 vec_id-ordered arrival chunks plus the planted 10-vector
+    # identical tail, which lands last (content-cached like s_dedup_near)
+    staged = stage_table(
+        spark, sf_dir, "ssemdedup", table="embeddings", id_col="vec_id", tail=10
     )
-
-    ckpt = _sweep_runs("ssemdedup") / "ckpt"
-
-    src = _P(sf_dir) / "embeddings.parquet"
-    st = os.stat(src)
-    fp = hashlib.md5(
-        f"{src.resolve()}|{st.st_size}|{st.st_mtime_ns}|4".encode()
-    ).hexdigest()[:16]
-    chunks = SCRATCH / "ssemdedup_stage" / f"{_P(sf_dir).name}_{fp}"
-
-    def _build(tmp) -> None:
-        base = load(spark, sf_dir, "embeddings")
-        tail = base.where(F.col("vec_id") < 10).withColumn(
-            "vec_id", F.col("vec_id") + 1_000_000
-        )
-        corpus = base.unionByName(tail).select("vec_id", "embedding", "label")
-        n = base.count()  # organic ids contiguous from 0 at every SF
-        bounds = [0, n // 4, n // 2, (3 * n) // 4, None]
-        write_chunks_pinned(
-            tmp,
-            [
-                corpus.where(
-                    (F.col("vec_id") >= lo)
-                    if hi is None
-                    else (F.col("vec_id") >= lo) & (F.col("vec_id") < hi)
-                )
-                for lo, hi in zip(bounds, bounds[1:])
-            ],
-        )
-
-    stage_atomic(chunks, _build)
 
     acc: dict[str, DataFrame | None] = {"bands": None, "vecs": None}
     survivors: list[DataFrame] = []
@@ -905,19 +810,12 @@ def s_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         acc["bands"], acc["vecs"] = old_bands, old_vecs
 
-    with bounded_stream_parts(spark):
-        q = (
-            spark.readStream.schema("vec_id bigint, embedding array<float>, label int")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(chunks))
-            .writeStream.foreachBatch(dedup_batch)
-            .option("checkpointLocation", str(ckpt))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    run_foreach_batch(
+        spark.readStream.schema("vec_id bigint, embedding array<float>, label int")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(staged),
+        dedup_batch,
+    )
 
     if not survivors:  # staging raced/empty: fail loudly, not IndexError
         raise RuntimeError("s_semdedup: no micro-batches fired")

@@ -476,15 +476,9 @@ def s_dsir_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACT sufficient statistic, so the certification is equality of the
     final scores, not a bound.
     """
-    from .streaming import (
-        _sweep_runs,
-        bounded_stream_parts,
-        documents_stream,
-        stage_documents,
-    )
+    from .streaming import documents_stream, run_foreach_batch, stage_table
 
-    staged = stage_documents(spark, sf_dir, "dsir")
-    ckpt = _sweep_runs("dsir_score") / "ckpt"
+    staged = stage_table(spark, sf_dir, "dsir")
 
     state: dict[int, list[int]] = {}
     folded_epochs: set[int] = set()
@@ -494,20 +488,7 @@ def s_dsir_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         # <= _N_BUCKETS rows — bounded metadata, never data-scale
         _fold_bucket_counts(state, folded_epochs, epoch_id, rows)
 
-    # Per-batch work folds to bounded metadata (or batch-grain slices)
-    # under the streaming conf (AQE off, shuffle partitions literal):
-    # bound the partitions for the run.
-    with bounded_stream_parts(spark):
-        q = (
-            documents_stream(spark, staged)
-            .writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", str(ckpt))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    run_foreach_batch(documents_stream(spark, staged), fold_batch)
 
     counts = spark.createDataFrame(
         [(b, ct, cr) for b, (ct, cr) in state.items()],
@@ -560,15 +541,9 @@ def s_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     bottom-k — this key emits the sampled ROWS, that one estimates
     cardinality from the same statistic.
     """
-    from .streaming import (
-        _sweep_runs,
-        bounded_stream_parts,
-        documents_stream,
-        stage_documents,
-    )
+    from .streaming import documents_stream, run_foreach_batch, stage_table
 
-    staged = stage_documents(spark, sf_dir, "rsv")
-    ckpt = _sweep_runs("reservoir") / "ckpt"
+    staged = stage_table(spark, sf_dir, "rsv")
 
     reservoir: list[tuple[str, int, str, str]] = []
 
@@ -592,20 +567,7 @@ def s_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         reservoir.sort()
         del reservoir[_RSV_K:]
 
-    # Per-batch work folds to bounded metadata (or batch-grain slices)
-    # under the streaming conf (AQE off, shuffle partitions literal):
-    # bound the partitions for the run.
-    with bounded_stream_parts(spark):
-        q = (
-            documents_stream(spark, staged)
-            .writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", str(ckpt))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    run_foreach_batch(documents_stream(spark, staged), fold_batch)
 
     return spark.createDataFrame(
         [

@@ -272,15 +272,9 @@ def s_winnow_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     at-scale sink is bucketBy(gram_hash) parquet appends, a sink change
     not a plan change.
     """
-    from .streaming import (
-        _sweep_runs,
-        bounded_stream_parts,
-        documents_stream,
-        stage_documents,
-    )
+    from .streaming import documents_stream, run_foreach_batch, stage_table
 
-    staged = stage_documents(spark, sf_dir, "winnow")
-    ckpt = _sweep_runs("winnow_matches") / "ckpt"
+    staged = stage_table(spark, sf_dir, "winnow")
 
     index_slices: list[DataFrame] = []
     pair_slices: list[DataFrame] = []
@@ -327,20 +321,7 @@ def s_winnow_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         index_slices.append(fp)
 
-    # Per-batch work folds to bounded metadata (or batch-grain slices)
-    # under the streaming conf (AQE off, shuffle partitions literal):
-    # bound the partitions for the run.
-    with bounded_stream_parts(spark):
-        q = (
-            documents_stream(spark, staged)
-            .writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", str(ckpt))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    run_foreach_batch(documents_stream(spark, staged), fold_batch)
 
     from functools import reduce
 

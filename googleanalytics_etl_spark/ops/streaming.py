@@ -177,8 +177,8 @@ def write_chunks_pinned(chunks_dir: Path, frames: list) -> None:
     would then reorder micro-batches and break determinism. The
     per-iteration directory diff identifies each chunk's files
     regardless of what the filesystem recorded. ONE definition serves
-    every file-stream staging loop (_stage_events here; s_dedup_near's
-    doc chunks in round6.py)."""
+    every file-stream staging loop (_stage_events, stage_table and
+    round6d's late-arrival replay)."""
     import time as _time
 
     base = int(_time.time())
@@ -291,20 +291,26 @@ def _events_stream(spark: SparkSession, stage: str) -> DataFrame:
     )
 
 
-def stage_documents(
-    spark: SparkSession, sf_dir: str, kind: str, n_chunks: int = 4
+def stage_table(
+    spark: SparkSession,
+    sf_dir: str,
+    kind: str,
+    table: str = "documents",
+    id_col: str = "doc_id",
+    tail: int = 0,
 ) -> str:
-    """Stage the documents table as ``n_chunks`` doc_id-ordered parquet
-    chunks with pinned ascending mtimes (the _stage_events recipe for
-    the corpus table): arrival order IS precedence for every
-    incremental-dedup loop, and the content fingerprint keys the cache
-    so repeated invocations measure the loop, not fixture writes.
-    Shared by the DSIR model fold (round9b) and the winnowing index
-    loop (round9c); round6's s_dedup_near keeps its own staging because
-    it plants a duplicate tail."""
+    """Stage ``table`` as four ``id_col``-ordered parquet chunks with pinned
+    ascending mtimes (the _stage_events recipe for a corpus table):
+    arrival order IS precedence for every incremental-dedup loop, and the
+    content fingerprint keys the cache under
+    ``SCRATCH/<kind>_stage/<sf name>_<fp>`` so repeated invocations
+    measure the loop, not fixture writes. ``tail`` plants exact
+    duplicates of ids ``0..tail-1`` under id + 1e6, so they arrive last,
+    after their originals are indexed."""
     import hashlib as _hashlib
 
-    src = Path(sf_dir) / "documents.parquet"
+    n_chunks = 4
+    src = Path(sf_dir) / f"{table}.parquet"
     st = os.stat(src)
     fp = _hashlib.md5(
         f"{src.resolve()}|{st.st_size}|{st.st_mtime_ns}|{n_chunks}".encode()
@@ -312,16 +318,25 @@ def stage_documents(
     stage = SCRATCH / f"{kind}_stage" / f"{Path(sf_dir).name}_{fp}"
 
     def _build(tmp: Path) -> None:
-        d = load(spark, sf_dir, "documents")
+        d = load(spark, sf_dir, table)
+        corpus = (
+            d.unionByName(
+                d.where(F.col(id_col) < tail).withColumn(
+                    id_col, F.col(id_col) + 1_000_000
+                )
+            )
+            if tail
+            else d
+        )
         n = d.count()  # organic ids are contiguous from 0 at every SF
         bounds = [i * n // n_chunks for i in range(n_chunks)] + [None]
         write_chunks_pinned(
             tmp,
             [
-                d.where(
-                    (F.col("doc_id") >= lo)
+                corpus.where(
+                    (F.col(id_col) >= lo)
                     if hi is None
-                    else (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
+                    else (F.col(id_col) >= lo) & (F.col(id_col) < hi)
                 )
                 for lo, hi in zip(bounds, bounds[1:])
             ],
@@ -367,10 +382,10 @@ def bounded_stream_parts(spark: SparkSession, parts: int | None = None):
     context is open would also plan at ``parts`` shuffle partitions —
     the engine never does that (keys run strictly sequentially), but a
     host application embedding these ops must not. Keys whose foreach-
-    batch side does data-scale (not state-grain) joins should pass an
-    explicit ``parts`` override — or, as the round-13 dedup family does,
-    keep the per-batch plans to arrival-state work and defer the heavy
-    joins past the stream, where the session's normal AQE conf applies.
+    batch side would do data-scale (not state-grain) joins keep the
+    per-batch plans to arrival-state work and defer the heavy joins past
+    the stream, where the session's normal AQE conf applies (the
+    round-13 dedup family).
     """
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
@@ -382,23 +397,37 @@ def bounded_stream_parts(spark: SparkSession, parts: int | None = None):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def _drive(df: DataFrame, sink, parts: int | None = None) -> None:
+    """The one stream lifecycle: run ``sink(df.writeStream)`` over every
+    available input under a fresh ``SCRATCH/ckpt/<uuid>`` checkpoint and
+    :func:`bounded_stream_parts`, stop the query even when a trigger
+    raises, and remove the checkpoint. A fresh checkpoint per run is what
+    makes every run replay the whole staged input; state a key keeps
+    across triggers lives in its own closure or run directory."""
+    ckpt = SCRATCH / "ckpt" / uuid.uuid4().hex
+    try:
+        with bounded_stream_parts(df.sparkSession, parts):
+            q = sink(df.writeStream).option("checkpointLocation", str(ckpt)).start()
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def run_foreach_batch(stream: DataFrame, fold) -> None:
+    """Drive ``stream`` to completion, calling ``fold(batch_df,
+    epoch_id)`` once per micro-batch (see :func:`_drive`)."""
+    _drive(stream, lambda w: w.foreachBatch(fold))
+
+
 def _run_to_memory(
     df: DataFrame, name: str, mode: str, parts: int | None = None
 ) -> None:
-    ckpt = SCRATCH / "ckpt" / uuid.uuid4().hex
-    with bounded_stream_parts(df.sparkSession, parts):
-        q = (
-            df.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", str(ckpt))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            shutil.rmtree(ckpt, ignore_errors=True)
+    _drive(
+        df, lambda w: w.outputMode(mode).format("memory").queryName(name), parts
+    )
 
 
 _WATERMARK_ORACLE = """
@@ -461,7 +490,6 @@ def s_incremental_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage = _stage_events(spark, sf_dir)
     run_dir = _sweep_runs("sync")
     target = run_dir / "target"
-    ckpt = run_dir / "ckpt"
     cols = ["event_id", "ts", "user_id", "event_type", "value"]
 
     seed = (
@@ -477,17 +505,7 @@ def s_incremental_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
         fresh = batch_df.select(cols).join(loaded, "event_id", "left_anti")
         fresh.write.mode("append").parquet(str(target))
 
-    with bounded_stream_parts(spark):
-        q = (
-            _events_stream(spark, stage)
-            .writeStream.foreachBatch(sync_batch)
-            .option("checkpointLocation", str(ckpt))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    run_foreach_batch(_events_stream(spark, stage), sync_batch)
 
     # eager checkpoint: a LATER call sweeps this run's directory, and a
     # caller may still hold this DataFrame lazily (restart-idempotency
@@ -537,7 +555,6 @@ def s_paged_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     run_dir = _sweep_runs("paged_sync")
     target = run_dir / "target"
-    ckpt = run_dir / "ckpt"
     cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
 
     seed = (
@@ -559,17 +576,9 @@ def s_paged_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sync_batch(batch_df: DataFrame, epoch_id: int) -> None:
         sink.upsert(batch_df.select(cols), count_appended=False)
 
-    with bounded_stream_parts(spark):
-        q = (
-            read_paged_stream(spark, sf_dir, chunks=5, parallel=True)
-            .writeStream.foreachBatch(sync_batch)
-            .option("checkpointLocation", str(ckpt))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    run_foreach_batch(
+        read_paged_stream(spark, sf_dir, chunks=5, parallel=True), sync_batch
+    )
 
     synced = (
         spark.read.parquet(str(target))
@@ -877,17 +886,7 @@ def _cdc_merge_loop(
                 shutil.rmtree(old, ignore_errors=True)
         epochs.append({"touched": touched, "manifest": dict(manifest)})
 
-    with bounded_stream_parts(spark):
-        q = (
-            _events_stream(spark, stage)
-            .writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", str(run_dir / "_ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    run_foreach_batch(_events_stream(spark, stage), apply_batch)
     return manifest, epochs
 
 

@@ -175,267 +175,13 @@ _DRIVER_ORDER: list[str] = [
 ]
 
 
-# PREPARED ROUND-5 WINDOW — exactly the 50 keys built late in round 4
-# that have never had a driver CORRECTNESS row (strict-verifier evidence
-# only). Next session: activate with `_WINDOW_OVERRIDE = _ROUND5_WINDOW`
-# below; the remaining keys keep their `_DRIVER_ORDER` relative order
-# after slot 50 (the round-4 window keys will then carry their r04 rows).
-_ROUND5_WINDOW: list[str] = [
-    "q_join_asof_tolerance", "x_top_movers", "x_ngram_novelty",
-    "q_join_null_safe", "q_time_weighted_avg",
-    "x_mixture_sample", "x_token_entropy", "x_winsorize",
-    "x_neighbor_jaccard", "x_bpe_merge", "x_semdedup",
-    "q_interval_merge", "x_containment", "x_approx_topk",
-    "x_bigram_logprob", "x_diverse_sample", "x_dp_groupby",
-    "q_scan_evolving", "q_scan_binaryfile", "x_dedup_incremental",
-    "s_topk_complete", "q_scan_malformed", "x_curation_e2e",
-    "x_bigram_heldout", "x_shard_balance", "x_weighted_sample",
-    "q_pivot_dynamic", "x_equidepth_hist", "x_bpe_apply", "x_dpp_join",
-    "x_hilbert", "x_rrf_fusion", "x_hard_negatives", "q_arrow_map",
-    "q_join_asof_forward", "x_filter_attribution", "x_graph_degree_dist",
-    "x_dedup_normalized", "x_pack_audit", "q_union_evolving",
-    "x_source_overlap", "s_session_dynamic", "q_fn_timezone",
-    "x_vocab_coverage", "x_train_val_test", "x_rfm_features",
-    "x_psi_drift", "x_user_coherent_sample", "x_dedup_threshold_curve",
-    "x_time_decay",
-]
-
-# ROUND-6 WINDOW — evidence rotation per VERDICT.md r5 item 1 / COVERAGE.md:
-# (a) the 6 keys registered after the round-5 window froze (never inside an
-#     official driver window; local verify_driver/strict evidence only);
-# (b) x_knn_join_blocked — its last driver row (r04) certified the OLD
-#     label-only blocking oracle, re-confirm under the (label, √n-IVF-cell)
-#     rework;
-# (c) x_semdedup / x_hard_negatives / x_span_dup_profile — implementations
-#     change THIS round (seed_assign argmax rework, span-dup df cap), so
-#     their r4/r5 rows would otherwise certify a superseded plan;
-# (d) 40 of the 42 keys whose latest driver evidence is round 1 —
-#     oldest-evidence-first, same discipline as rounds 4–5. The two r1
-#     keys deferred to round 7 (q_approx_distinct — rows-only by design,
-#     the weaker check regardless of window slot — and q_fn_bitwise) are
-#     first in line after slot 50.
-_ROUND6_WINDOW: list[str] = [
-    # (a) never driver-checked
-    "q_scan_paged", "q_approx_distinct_bound", "x_semdedup_survivors",
-    "x_cluster_purity", "x_span_dedup", "s_paged_sync",
-    # (b) stale oracle evidence
-    "x_knn_join_blocked",
-    # (c) implementation reworked this round
-    "x_semdedup", "x_hard_negatives", "x_span_dup_profile",
-    # (d) latest driver row = round 1, oldest evidence in the repo
-    "q_flagship2", "q_funnel", "q_retention", "q_anomaly_zscore",
-    "q_join_inner", "q_join_left", "q_join_broadcast", "q_join_semi",
-    "q_groupby_agg", "q_count_distinct", "q_distinct_rows",
-    "q_rollup", "q_cube", "q_grouping_sets", "q_pivot",
-    "q_agg_filtered", "q_agg_stats", "q_agg_minmax_by",
-    "q_fn_string", "q_fn_date", "q_fn_math", "q_fn_hash", "q_fn_json",
-    "q_fn_array", "q_fn_map", "q_fn_variant", "q_fn_url",
-    "x_dedup_exact", "x_sim_knn", "x_text_stats", "x_lang_route",
-    "x_doc_join", "x_ngram_jaccard", "x_embed_cosine_dedup",
-    "x_tokenize", "x_lang_id", "x_quality_score", "x_fingerprint",
-    "x_validate", "x_cdc_chunks",
-]
-
-# Round 7 head start: once the round-6 rows land, the next window should
-# lead with the two deferred r1 keys and the six operators built in
-# round 6 (never driver-checked), then the 49 keys whose latest row is
-# round 2 (see COVERAGE.md).
-_ROUND7_HEAD: list[str] = [
-    "q_approx_distinct", "q_fn_bitwise",
-    "x_class_balance", "x_survivor_policy", "x_source_kl",
-    "x_token_budget", "x_split_contamination", "x_dup_inflation",
-    "s_dedup_near", "x_ndcg_eval", "x_compaction_plan",
-    "x_join_skew_diagnose", "s_psi_monitor",
-    "x_prefix_dedup", "x_tokenizer_fertility", "x_freq_prune_vocab",
-    "x_embed_outliers",
-    "x_cross_source_dups", "x_context_truncation", "x_exact_stratified",
-    "s_late_data_audit", "x_lsh_tuning",
-    "x_weighted_jaccard", "x_boilerplate_score",
-    "s_update_counts", "x_embed_dim_stats",
-    "x_minhash_accuracy", "x_dup_trend",
-    "x_pq_quantize", "x_dataset_card",
-    "x_adc_scan", "x_did_analysis",
-    "x_bootstrap_ci", "x_dataset_diff",
-    "x_cc_sizes", "x_length_bias_audit", "x_quality_vs_dup",
-    "x_random_projection", "x_time_to_convert",
-    "x_ppl_filter", "x_neg_sampling_table",
-    "x_privacy_kanon", "x_churn_label",
-    "x_chi2_independence", "x_ab_srm_check",
-    "q_sql_udf", "q_sql_params",
-    "x_mmr_rerank",
-    "x_auc_roc", "x_calibration_ece",
-    "x_kaplan_meier", "x_cusum_changepoint",
-    "x_basket_lift", "x_mutual_info",
-    "x_ks_test", "x_welch_ttest",
-    "x_spearman_corr", "x_gini_concentration",
-    "x_kneser_ney", "x_benford",
-    "x_hits", "x_seasonal_profile",
-    "x_forecast_eval", "x_quantile_normalize",
-    "x_collocation_llr", "x_session_entropy",
-    "x_zipf_fit", "x_heaps_law",
-    "x_target_encode", "x_kfold_stats",
-    "x_posting_lists", "x_eb_shrinkage",
-    "x_sequence_mining", "x_graph_2hop",
-    "x_growth_accounting", "x_outlier_iqr",
-    "x_funnel_windowed", "x_ts_features",
-    "x_ab_cuped", "x_burst_detect",
-    "x_mix_shift", "x_item_cf",
-    "x_session_paths", "x_peak_concurrency",
-    "x_theil_sen", "x_autocorr",
-    "q_fn_regex", "q_session_window_tvf",
-    "x_ri_audit", "x_scd2_snapshot",
-    "x_funnel_window_sweep", "x_gap_histogram",
-    "x_weighted_percentile", "x_active_streaks",
-    "x_ratio_metric_delta", "x_ship_lag",
-    "x_error_budget", "x_vocab_overlap",
-    "x_seasonal_anomaly", "x_burstiness",
-    "x_clustering_coef", "x_assortativity",
-    "x_transition_entropy", "x_modularity",
-    "x_runs_test", "x_abc_class",
-    "x_simpsons_slope", "x_cohens_d",
-    "s_error_budget",
-    "x_mixture_weights", "x_embed_drift",
-]
-
-# Round 8 head start (pre-staged per VERDICT.md r6 item 2): lead with the
-# 61 `_ROUND7_HEAD` keys that fall outside round 7's 50-key window (the
-# remaining never-driver-tested set), then the 48 keys whose latest driver
-# evidence is round 2 plus the rows-only `s_stateful_user`, oldest-evidence-
-# first — same rotation discipline as rounds 4–7. Round 8 takes the first
-# 50 (clearing the never-tested debt to 11); round 9 takes the next 50.
-# Flip with `_WINDOW_OVERRIDE = _ROUND8_HEAD` as round 8's first commit.
-# the 48 keys whose latest driver evidence is round 2, plus the
-# rows-only s_stateful_user — the oldest-evidence refresh segment
-_R2_TAIL: list[str] = [
-    "q_scan_parquet", "q_scan_pruned", "q_scan_csv", "q_scan_json",
-    "q_project_rename", "q_filter_pred", "q_derive_expr", "q_case_when",
-    "q_null_handling", "q_join_anti", "q_join_range", "q_join_asof",
-    "q_unpivot", "q_window_rank", "q_window_lag", "q_running_sum",
-    "q_window_range_frame", "q_first_last_touch", "q_ntile",
-    "q_percent_rank", "q_orderby_limit", "q_topk_per_group",
-    "q_union_all", "q_except", "q_intersect", "q_collect_sorted",
-    "q_date_spine", "s_tumbling", "s_sliding", "s_session",
-    "s_watermark", "s_dedup", "s_incremental_sync", "q_udf_scalar",
-    "q_udf_pandas", "q_udaf_pandas", "q_udtf_explode", "q_udtf_pairs",
-    "x_dedup_near", "x_dedup_simhash", "x_dedup_near_survivors",
-    "x_sample_hash", "x_stratified_sample", "x_chunk_docs",
-    "x_pack_sequences", "x_pii_scrub", "x_corpus_shard", "x_corpus_prep",
-    "s_stateful_user",
-]
-
-# round-7 additions (never driver-tested when round 8 opened)
-_R7_ADDITIONS: list[str] = [
-    "q_jdbc_roundtrip", "s_jdbc_sync", "x_countmin_bound",
-    "x_anova_oneway", "x_mann_whitney",
-    "x_kruskal_wallis", "x_pr_auc", "x_cramers_v", "x_js_divergence",
-    "x_page_hinkley",
-    "x_bloom_fpr", "x_hll_relational", "x_ols_multi",
-    "x_power_iteration", "s_hll_merge",
-    "x_ab_power_mde", "x_wilson_ci", "x_seasonal_decompose",
-    "x_gains_table", "x_kcore_peel",
-]
-
-# round-8 additions: mergeable-sketch streaming certifications + the
-# sketch-space set-difference estimator
-_R8_ADDITIONS: list[str] = [
-    "s_kll_merge", "s_theta_merge", "x_kmv_diff", "s_countmin_merge",
-    "s_semdedup",
-]
-
-# Round-8 head (LIVE window this round, per the comment above
-# _R2_TAIL): the 61 never-driver-tested _ROUND7_HEAD overflow keys,
-# then the oldest-evidence refresh, then the round-7 additions —
-# round 8's window takes the first 50.
-_ROUND8_HEAD: list[str] = _ROUND7_HEAD[50:] + _R2_TAIL + _R7_ADDITIONS
-
-# round-9 additions: the banded-LSH x_semdedup redesign (scale path,
-# NEW semantics — its old r5 driver row certified the IVF output, so it
-# needs a fresh official row) and the IVF path re-registered under its
-# own key (never driver-tested by that name)
-_R9_ADDITIONS: list[str] = ["x_semdedup", "x_semdedup_ivf"]
-
-# Round 9 head start: ALL remaining never-driver-tested keys first —
-# the 11 round-6/7 keys the round-8 window didn't reach
-# (_ROUND7_HEAD[100:]), then the round-7/8/9 additions — so the full
-# never-tested debt clears inside round 9's 50-slot window; the
-# remaining slots refresh the oldest (r2) evidence, and the r2
-# overflow spills to round 10 (every key then carries official driver
-# evidence, r9 having covered all first-timers). Flip with
-# `_WINDOW_OVERRIDE = _ROUND9_HEAD` as round 9's first commit.
-_ROUND9_HEAD: list[str] = (
-    _ROUND7_HEAD[100:]
-    + _R7_ADDITIONS
-    + _R8_ADDITIONS
-    + _R9_ADDITIONS
-    + _R2_TAIL
-)
-
-# round-9 LATE additions (registered after the round-9 window froze —
-# never driver-tested, so they lead round 10 per the standing rotation
-# discipline; both already hash-verified in-repo at sf0.01 AND sf0.1)
-_R9_LATE: list[str] = [
-    "x_semdedup_survivors_banded", "x_signlsh_tuning",
-    "x_semdedup_incremental", "x_semdedup_threshold_curve",
-    "x_dsir_weights", "x_dsir_resample", "x_mixture_temperature",
-    "s_dsir_score", "x_winnow_fingerprint", "x_winnow_matches",
-    "s_winnow_matches", "s_reservoir_sample",
-]
-
-# Round 10 head start (pre-staged per the round-8 verdict's rotation
-# discipline): the 12 round-9 late additions lead (first-ever driver
-# rows: the banded-semdedup family + the DSIR/mixture data-selection
-# batch), then the 37 keys whose latest evidence is still round 2 (the
-# _R2_TAIL overflow round 9's window didn't reach), then the oldest
-# round-3-era keys to fill the 50-slot window (the overflow spills to
-# round 11). Flip with `_WINDOW_OVERRIDE = _ROUND10_HEAD` as round 10's
-# first commit.
-_ROUND10_HEAD: list[str] = _R9_LATE + _R2_TAIL[12:] + [
-    "q_attribution", "q_bounce_rate", "q_cast_types", "q_correlation",
-    "q_entry_exit", "q_ewma", "q_gap_fill", "q_histogram",
-    "q_incremental_agg",
-]
-
-# round-10 additions (registered after the round-10 window froze —
-# never driver-tested): the exact-substring dedup family.
-_R10_ADDITIONS: list[str] = [
-    "x_exact_substring_dedup", "x_exact_substring_clean",
-    "s_exact_substring_dedup", "x_decontaminate_spans",
-]
-
-# Round 11 head start (pre-staged per the standing rotation
-# discipline): the four round-10 additions lead (first-ever driver
-# rows), then the keys whose latest official evidence is oldest
-# (round 3: the TPC-H suite + the round-3 relational tail the
-# round-10 window did not reach). Flip with
-# `_WINDOW_OVERRIDE = _ROUND11_HEAD` as round 11's first commit.
-_ROUND11_HEAD: list[str] = [
-    "x_exact_substring_dedup", "x_exact_substring_clean", "s_exact_substring_dedup",
-    "x_decontaminate_spans",
-    "q_bounce_rate", "q_cast_types", "q_correlation",
-    "q_entry_exit", "q_ewma", "q_gap_fill",
-    "q_histogram", "q_incremental_agg", "q_path_transitions",
-    "q_percentiles", "q_skew_distinct", "q_skew_join",
-    "q_subquery_correlated", "q_subquery_exists", "q_tpch_q1",
-    "q_tpch_q10", "q_tpch_q11", "q_tpch_q12",
-    "q_tpch_q13", "q_tpch_q14", "q_tpch_q15",
-    "q_tpch_q16", "q_tpch_q17", "q_tpch_q18",
-    "q_tpch_q19", "q_tpch_q2", "q_tpch_q20",
-    "q_tpch_q21", "q_tpch_q22", "q_tpch_q3",
-    "q_tpch_q4", "q_tpch_q5", "q_tpch_q6",
-    "q_tpch_q7", "q_tpch_q8", "q_tpch_q9",
-    "s_cdc_apply", "s_enrich", "s_stream_join",
-    "x_bloom_semi", "x_countmin", "x_decontaminate",
-    "x_dedup_clusters", "x_media_frames", "x_multimodal",
-    "x_pagerank",
-]
-
 # Round 12 head start (pre-staged per the standing rotation discipline):
 # the four round-11 additions lead (registered after the round-11
 # window froze — first official driver rows), then the oldest-evidence
 # refresh: the three remaining round-3 keys and the round-4-era tail in
 # alphabetical order (the overflow, x_sketch_kll_quantiles onward,
-# spills to round 13). Flip with
-# `_WINDOW_OVERRIDE = _ROUND12_HEAD` as round 12's first commit.
+# spills to round 13). This is the live window: ``_WINDOW_OVERRIDE``
+# points here.
 _ROUND12_HEAD: list[str] = [
     "x_dup_rate_by_source", "x_decon_report", "s_exact_substring_durable",
     "s_decon_gate",
@@ -455,34 +201,6 @@ _ROUND12_HEAD: list[str] = [
     "x_kmeans", "x_langid_confusion", "x_ngram_counts",
     "x_profile", "x_repetition_score", "x_sim_knn_ivf",
     "x_sim_knn_lsh",
-]
-
-# Round 13 head start (pre-staged per the standing rotation
-# discipline, generated from LEDGER.md's oldest-evidence ordering):
-# round-12 additions lead (first official driver rows), then the
-# round-4-era sketch/zonemap tail, then the round-5 long tail in
-# alphabetical order (49 of the ~50 round-5 keys fit; the remainder
-# spills to round 14). Flip with
-# `_WINDOW_OVERRIDE = _ROUND13_HEAD` as round 13's first commit.
-_ROUND13_HEAD: list[str] = [
-    "q_join_range_banded",
-    "x_sketch_hll_wau", "x_sketch_kll_quantiles", "x_sketch_theta_overlap",
-    "x_zonemap_skip", "x_zorder",
-    "q_arrow_map", "q_fn_timezone", "q_interval_merge",
-    "q_join_asof_forward", "q_join_asof_tolerance", "q_join_null_safe",
-    "q_pivot_dynamic", "q_scan_binaryfile", "q_scan_evolving",
-    "q_scan_malformed", "q_time_weighted_avg", "q_union_evolving",
-    "s_session_dynamic", "s_topk_complete", "x_approx_topk",
-    "x_bigram_heldout", "x_bigram_logprob", "x_bpe_apply",
-    "x_bpe_merge", "x_containment", "x_curation_e2e",
-    "x_dedup_incremental", "x_dedup_normalized", "x_dedup_threshold_curve",
-    "x_diverse_sample", "x_dp_groupby", "x_dpp_join",
-    "x_equidepth_hist", "x_filter_attribution", "x_graph_degree_dist",
-    "x_hilbert", "x_mixture_sample", "x_neighbor_jaccard",
-    "x_ngram_novelty", "x_pack_audit", "x_psi_drift",
-    "x_rfm_features", "x_rrf_fusion", "x_shard_balance",
-    "x_source_overlap", "x_time_decay", "x_token_entropy",
-    "x_top_movers", "x_train_val_test",
 ]
 
 _WINDOW_OVERRIDE: list[str] | None = _ROUND12_HEAD
