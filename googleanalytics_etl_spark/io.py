@@ -26,6 +26,7 @@ Timestamp fidelity contract (FIXTURES.md "Timestamp handling", verified):
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -81,6 +82,26 @@ def ensure_session_confs(spark: SparkSession) -> None:
             pass
 
 
+# (path, size, mtime_ns, nanosAsLong) -> the schema Spark inferred from
+# that file's footer. Inference runs a Spark job on every read; a repeat
+# load of the same file version reads with the known schema instead.
+# Stale versions of a path are evicted, so the cache holds one entry per
+# fixture file.
+_SCHEMA_CACHE: dict = {}
+
+
+def _schema_key(spark: SparkSession, path: str):
+    """Cache key for a local regular file; None (no caching) otherwise."""
+    try:
+        st = os.stat(path)
+    except OSError:  # a remote URI or a missing file: let Spark decide
+        return None
+    if not stat.S_ISREG(st.st_mode):  # a directory can change inside
+        return None
+    nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    return (path, st.st_size, st.st_mtime_ns, nanos)
+
+
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Load one fixture table as a DataFrame with canonical types.
 
@@ -88,7 +109,15 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     is converted to microsecond ``timestamp_ntz`` matching DuckDB's view.
     """
     ensure_session_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    path = f"{sf_dir}/{table}.parquet"
+    key = _schema_key(spark, path)
+    schema = _SCHEMA_CACHE.get(key) if key else None
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
+    if key and schema is None:
+        for k in [k for k in _SCHEMA_CACHE if k[0] == path]:
+            del _SCHEMA_CACHE[k]
+        _SCHEMA_CACHE[key] = df.schema
     if table == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn(
             "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")

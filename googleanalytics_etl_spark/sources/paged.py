@@ -5,15 +5,19 @@ the requested date range into small chunks (to defeat GA sampling) and
 loops a page token inside each chunk [REF-UNVERIFIED: SURVEY.md §2.A
 "Paged-API source", §3.1]. Its Spark-native re-expression is a **Python
 Data Source** (Spark 4 ``pyspark.sql.datasource``) whose planner emits
-**one input partition per date chunk** — so the "API" is pulled by all
+one input partition per date chunk — so the "API" is pulled by all
 executors in parallel, each chunk internally iterating fixed-size pages
-exactly like a pageToken loop. Date-range work is pruned twice: the
-planner derives chunk bounds from footer statistics only, and each
-partition reads only the row groups overlapping its chunk. Predicate
-pushdown (``pushFilters``) applies supported comparisons at the source,
-mirroring the reference's request-body filters. (Column pruning is not
-yet part of Spark's Python DataSource reader API — the fixed six-column
-schema is returned as declared.)
+exactly like a pageToken loop. Without an explicit ``chunks`` the
+planner plans ``min(8, row groups overlapping the file's ts range)``
+chunks: row groups are the read unit, so a finer split only re-reads
+the same group in more tasks (a one-row-group increment is one task).
+Date-range work is pruned twice: the planner derives chunk bounds from
+footer statistics only, and each partition reads only the row groups
+overlapping its chunk. Predicate pushdown (``pushFilters``) applies
+supported comparisons at the source, mirroring the reference's
+request-body filters. (Column pruning is not yet part of Spark's Python
+DataSource reader API — the fixed six-column schema is returned as
+declared.)
 
 No network exists in this environment, so the "REST endpoint" is played
 by the events parquet file read through pyarrow (TESTDATA is the fake
@@ -109,6 +113,45 @@ def _read_metadata_cached(path: str):
     return meta
 
 
+# The most chunks the batch planner picks when the caller names none.
+_MAX_CHUNKS = 8
+
+
+def _row_group_ts_bounds(path: str) -> list[tuple[int, int] | None]:
+    """Per-row-group (min_ns, max_ns) of ``ts`` from the footer
+    statistics — never data. None marks a group without usable
+    statistics, which every range must treat as overlapping."""
+    meta = _read_metadata_cached(path)
+    ts_idx = next(
+        i for i in range(len(meta.schema)) if meta.schema.column(i).name == "ts"
+    )
+    out: list[tuple[int, int] | None] = []
+    for rg in range(meta.num_row_groups):
+        st = meta.row_group(rg).column(ts_idx).statistics
+        if st is None or st.min is None or st.max is None:
+            out.append(None)
+        else:
+            out.append((_stat_ns(st.min), _stat_ns(st.max)))
+    return out
+
+
+def _overlapping(bounds, start_ns: int, end_ns: int) -> list[int]:
+    """Indexes of the row groups that may hold a ts in [start_ns, end_ns)."""
+    return [
+        rg
+        for rg, b in enumerate(bounds)
+        if b is None or (b[1] >= start_ns and b[0] < end_ns)
+    ]
+
+
+def _ts_range(bounds) -> tuple[int, int] | None:
+    """(min_ns, max_ns) over the groups with statistics; None if none has."""
+    known = [b for b in bounds if b is not None]
+    if not known:
+        return None
+    return min(b[0] for b in known), max(b[1] for b in known)
+
+
 def _range_table(path: str, start_ns: int, end_ns: int):
     """Footer-stats row-group pruning + ts normalization for events with
     ts in [start_ns, end_ns): only row groups whose min/max overlap the
@@ -121,19 +164,7 @@ def _range_table(path: str, start_ns: int, end_ns: int):
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    meta = _read_metadata_cached(path)
-    ts_idx = next(
-        i for i in range(len(meta.schema)) if meta.schema.column(i).name == "ts"
-    )
-    groups = []
-    for rg in range(meta.num_row_groups):
-        st = meta.row_group(rg).column(ts_idx).statistics
-        if st is None or st.min is None or st.max is None:
-            groups.append(rg)  # unknown range: must read
-            continue
-        mn, mx = _stat_ns(st.min), _stat_ns(st.max)
-        if mx >= start_ns and mn < end_ns:
-            groups.append(rg)
+    groups = _overlapping(_row_group_ts_bounds(path), start_ns, end_ns)
     if not groups:
         return None
     table = pq.ParquetFile(path).read_row_groups(groups)
@@ -147,7 +178,8 @@ def _range_table(path: str, start_ns: int, end_ns: int):
 class PagedEventsReader(DataSourceReader):
     def __init__(self, options: dict):
         self.path = options["path"]
-        self.n_chunks = int(options.get("chunks", 8))
+        chunks = options.get("chunks")
+        self.n_chunks = int(chunks) if chunks is not None else None
         self.page_size = int(options.get("page_size", 10_000))
         self.accepted: list = []
 
@@ -195,33 +227,20 @@ class PagedEventsReader(DataSourceReader):
         return table
 
     def partitions(self):
-        import pyarrow.parquet as pq
-
         # Planning = the date-range split. Only footer statistics are
         # read on the driver (row-group min/max of ts), never data.
-        meta = pq.read_metadata(self.path)
-        lo, hi = None, None
-        ts_idx = next(
-            i
-            for i in range(len(meta.schema))
-            if meta.schema.column(i).name == "ts"
-        )
-        for rg in range(meta.num_row_groups):
-            st = meta.row_group(rg).column(ts_idx).statistics
-            if st is None or st.min is None or st.max is None:
-                continue  # stats-less row group: fall back below
-            mn, mx = _stat_ns(st.min), _stat_ns(st.max)
-            lo = mn if lo is None else min(lo, mn)
-            hi = mx if hi is None else max(hi, mx)
-        if lo is None or hi is None:
+        bounds = _row_group_ts_bounds(self.path)
+        rng = _ts_range(bounds)
+        if rng is None:
             # no usable ts statistics (stats disabled / empty file):
             # degrade to one full-range chunk rather than crash planning
             return [DateChunk(-(2**62), 2**62)]
-        span = (hi - lo) // self.n_chunks + 1
-        return [
-            DateChunk(lo + i * span, lo + (i + 1) * span)
-            for i in range(self.n_chunks)
-        ]
+        lo, hi = rng
+        n = self.n_chunks or max(
+            1, min(_MAX_CHUNKS, len(_overlapping(bounds, lo, hi + 1)))
+        )
+        span = (hi - lo) // n + 1
+        return [DateChunk(lo + i * span, lo + (i + 1) * span) for i in range(n)]
 
     def read(self, partition: DateChunk):
         # The 'server side': date-range filter applied at the source
@@ -250,24 +269,38 @@ class PagedEventsDataSource(DataSource):
         return PagedEventsReader(self.options)
 
 
+def _register(spark: SparkSession, source: type) -> None:
+    """Register a Python data source once per session (re-registering
+    replaces it and logs a warning on every call)."""
+    manager = spark._jsparkSession.sessionState().dataSourceManager()
+    if not manager.dataSourceExists(source.name()):
+        spark.dataSource.register(source)
+
+
 def read_paged(
-    spark: SparkSession, sf_dir: str, chunks: int = 8, page_size: int = 10_000
+    spark: SparkSession,
+    sf_dir: str,
+    chunks: int | None = None,
+    page_size: int = 10_000,
 ) -> DataFrame:
     """Read the event log through the paged source, with canonical types
-    (ns → µs timestamp_ntz, matching :func:`...io.load`)."""
+    (ns → µs timestamp_ntz, matching :func:`...io.load`). ``chunks``
+    fixes the number of date chunks (input partitions); without it the
+    planner picks ``min(8, overlapping row groups)``."""
     if not _HAS_PYDS:  # covered via monkeypatch (test_sources_etl)
         raise NotImplementedError("Python Data Source API requires Spark >= 4.0")
     from ..io import ensure_session_confs
 
     ensure_session_confs(spark)  # pushdown conf; vanilla driver sessions
-    spark.dataSource.register(PagedEventsDataSource)
-    df = (
+    _register(spark, PagedEventsDataSource)
+    reader = (
         spark.read.format("paged_events")
         .option("path", f"{sf_dir}/events.parquet")
-        .option("chunks", str(chunks))
         .option("page_size", str(page_size))
-        .load()
     )
+    if chunks is not None:
+        reader = reader.option("chunks", str(chunks))
+    df = reader.load()
     return df.withColumn(
         "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
     )
@@ -321,25 +354,11 @@ class PagedEventsStreamReader(SimpleDataSourceStreamReader):
         """[b0, b1, ..., bn]: chunk i covers [b_i, b_{i+1}) in ns."""
         if self._bounds is not None:
             return self._bounds
-        import pyarrow.parquet as pq
-
-        meta = pq.read_metadata(self.path)
-        ts_idx = next(
-            i
-            for i in range(len(meta.schema))
-            if meta.schema.column(i).name == "ts"
-        )
-        lo, hi = None, None
-        for rg in range(meta.num_row_groups):
-            st = meta.row_group(rg).column(ts_idx).statistics
-            if st is None or st.min is None or st.max is None:
-                continue
-            mn, mx = _stat_ns(st.min), _stat_ns(st.max)
-            lo = mn if lo is None else min(lo, mn)
-            hi = mx if hi is None else max(hi, mx)
-        if lo is None or hi is None:  # stats-less: one full-range chunk
+        rng = _ts_range(_row_group_ts_bounds(self.path))
+        if rng is None:  # stats-less: one full-range chunk
             self._bounds = [-(2**62), 2**62]
             return self._bounds
+        lo, hi = rng
         span = (hi - lo) // self.n_chunks + 1
         # strictly increasing, terminal element ALWAYS the true maximum
         # hi+1: for a degenerate ts span (< n_chunks ns) lo + i*span can
@@ -432,32 +451,8 @@ class PagedEventsParallelStreamReader(DataSourceStreamReader):
         self.subsplits = int(options.get("subsplits", 4))
         self._bounds: list[int] | None = None
         self._hwm_ns: int | None = None
-        self._rg_bounds: list[tuple[int, int] | None] | None = None
 
     _chunk_bounds = PagedEventsStreamReader._chunk_bounds
-
-    def _row_group_bounds(self) -> list[tuple[int, int] | None]:
-        """Per-row-group (min_ns, max_ns) from footer stats, cached
-        (None = stats-less group, treated as overlapping everything)."""
-        if self._rg_bounds is not None:
-            return self._rg_bounds
-        import pyarrow.parquet as pq
-
-        meta = pq.read_metadata(self.path)
-        ts_idx = next(
-            i
-            for i in range(len(meta.schema))
-            if meta.schema.column(i).name == "ts"
-        )
-        out: list[tuple[int, int] | None] = []
-        for rg in range(meta.num_row_groups):
-            st = meta.row_group(rg).column(ts_idx).statistics
-            if st is None or st.min is None or st.max is None:
-                out.append(None)
-            else:
-                out.append((_stat_ns(st.min), _stat_ns(st.max)))
-        self._rg_bounds = out
-        return out
 
     def initialOffset(self) -> dict:
         return {"hwm_ns": self._chunk_bounds()[0]}
@@ -487,11 +482,7 @@ class PagedEventsParallelStreamReader(DataSourceStreamReader):
         # group, 4 subsplits each re-read the full group and keep a
         # quarter. At scale (thousands of groups per span) the cap
         # never binds and the configured parallelism applies.
-        overlap = sum(
-            1
-            for b in self._row_group_bounds()
-            if b is None or (b[1] >= s and b[0] < e)
-        )
+        overlap = len(_overlapping(_row_group_ts_bounds(self.path), s, e))
         n = max(1, min(self.subsplits, overlap))
         span = (e - s) // n + 1
         return [
@@ -531,8 +522,9 @@ def read_paged_stream(
     if not _HAS_PYDS_STREAM:  # pragma: no cover - older Spark
         raise NotImplementedError("Python Data Source API requires Spark >= 4.0")
     fmt = "paged_events_stream_parallel" if parallel else "paged_events_stream"
-    spark.dataSource.register(
-        PagedEventsParallelStreamSource if parallel else PagedEventsStreamSource
+    _register(
+        spark,
+        PagedEventsParallelStreamSource if parallel else PagedEventsStreamSource,
     )
     df = (
         spark.readStream.format(fmt)

@@ -22,6 +22,8 @@ The reference appends typed rows to a SQL table via SQLAlchemy
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -124,9 +126,10 @@ class BucketedUpsertSink:
     the target schema after first contact, and (for callers that do not
     need the appended-row count, like the streaming loop whose
     idempotency is already guaranteed by the anti-join) offers
-    ``count_appended=False``: the fresh-rows plan is evaluated exactly
-    once by the write itself instead of persist → count → write,
-    dropping one full Spark job per micro-batch. All of this is
+    ``count_appended=False``: the fresh-rows plan is evaluated by the
+    write itself, without the count job. With the count, the anti-join
+    is still evaluated once: the count job pins its rows (a lazy local
+    checkpoint) and the write reads them back. All of this is
     job-setup constant, not data IO — the touched-buckets-only pruning
     contract is byte-identical to :func:`upsert_append` and covered by
     the same tests (tests/test_streaming.py asserts appended files land
@@ -207,7 +210,8 @@ class BucketedUpsertSink:
         # touched bucket gains exactly one file per upsert, bounding
         # small-file growth at any scale; capping the tasks at the cores
         # halved this write for a 3.4k-row increment on 4 cores (32
-        # files from 4 tasks: 0.35-0.41 s, from 32 tasks: 0.71-0.80 s)
+        # files from 4 tasks: 0.35-0.41 s, from 32 tasks: 0.71-0.80 s;
+        # from one task without the shuffle: 0.43-0.58 s)
         parts = min(n_touched, df.sparkSession.sparkContext.defaultParallelism)
         (
             df.repartition(parts, "bucket")
@@ -232,48 +236,34 @@ class BucketedUpsertSink:
             F.xxhash64(F.col(self.key)), F.lit(self.n_buckets)
         ).cast("int")
 
-        if state == "empty":
-            inc = incoming.withColumn("bucket", bucket)
-            if not count_appended and wm is None:
-                self._write(inc, self.n_buckets)
-                self._state = "bucketed"
-                return None
-            # persisted: the write reads back the rows the count/max job
-            # computed, and nothing re-reads the files just written. No
-            # rows → no write, so the target stays absent ("empty").
-            inc = inc.persist()
-            try:
+        if state == "flat":  # legacy flat target — full-scan anti-join
+            loaded = self.read_target(spark).select(self.key)
+            with _pinned(incoming.join(loaded, self.key, "left_anti")) as fresh:
+                n = fresh.count()
+                if n:
+                    fresh.write.mode("append").parquet(self.target_path)
+            return n if count_appended else None
+
+        if state == "empty" and not count_appended and wm is None:
+            self._write(incoming.withColumn("bucket", bucket), self.n_buckets)
+            self._state = "bucketed"
+            return None
+
+        # pinned: the count/touched-bucket job, the anti-join and the
+        # append all observe the SAME rows even if `incoming` is
+        # nondeterministic, and the first job computes them in passing
+        with _pinned(incoming.withColumn("bucket", bucket)) as inc:
+            if state == "empty":
+                # No rows → no write, so the target stays absent ("empty").
                 n, inc_max = inc.agg(F.count(F.lit(1)), top).first()
                 if n:
                     self._write(inc, self.n_buckets)
                     self._state = "bucketed"
-            finally:
-                inc.unpersist()
-            self.incoming_max, self.incoming_max_known = inc_max, wm is not None
-            return n if count_appended else None
+                self.incoming_max, self.incoming_max_known = inc_max, wm is not None
+                return n if count_appended else None
 
-        if state == "flat":  # legacy flat target — full-scan anti-join
-            loaded = self.read_target(spark).select(self.key)
-            fresh = incoming.join(loaded, self.key, "left_anti").persist()
-            try:
-                n = fresh.count()
-                if n:
-                    fresh.write.mode("append").parquet(self.target_path)
-            finally:
-                fresh.unpersist()
-            return n if count_appended else None
-
-        # bucketed: persist so the touched-bucket set, the anti-join and
-        # the append all observe the SAME rows even if `incoming` is
-        # nondeterministic
-        inc = incoming.withColumn("bucket", bucket).persist()
-        try:
-            # ≤ n_buckets rows — bounded metadata, never data-scale
-            stats = inc.groupBy("bucket").agg(top.alias("top")).collect()
-            touched = [r["bucket"] for r in stats]
-            self.incoming_max = max(
-                (r["top"] for r in stats if r["top"] is not None), default=None
-            )
+            # ≤ n_buckets values — bounded metadata, never data-scale
+            touched, self.incoming_max = inc.agg(F.collect_set("bucket"), top).first()
             self.incoming_max_known = wm is not None
             if not touched:
                 return 0 if count_appended else None
@@ -282,21 +272,43 @@ class BucketedUpsertSink:
                 .where(F.col("bucket").isin(touched))  # dir-pruned scan
                 .select(self.key)
             )
-            fresh = inc.join(loaded, self.key, "left_anti")
+            anti = inc.join(loaded, self.key, "left_anti")
             if not count_appended:
                 # single evaluation of the anti-join, inside the write
-                self._write(fresh, len(touched))
+                self._write(anti, len(touched))
                 return None
-            fresh = fresh.persist()
-            try:
+            # the count evaluates the anti-join once against the target
+            # as it was; the write reads those rows back. (A persisted
+            # frame would be re-cached, and a count taken after the
+            # write re-evaluated, against the grown target.)
+            with _pinned(anti) as fresh:
                 n = fresh.count()
                 if n:
                     self._write(fresh, len(touched))
-            finally:
-                fresh.unpersist()
             return n
-        finally:
-            inc.unpersist()
+
+
+@contextmanager
+def _pinned(df: DataFrame):
+    """``df`` as a lazily local-checkpointed frame; its blocks are
+    dropped on exit.
+
+    The first action computes the rows and keeps them in the block
+    manager; later actions read them back and never re-evaluate the
+    plan, so a later change to an input the plan reads (the sink's own
+    target) cannot change them. Unlike ``persist``, the frame is not in
+    Spark's cache manager: a write to a path it reads neither re-caches
+    nor re-evaluates it. A lost block fails the action instead of
+    recomputing it; the upsert is idempotent, so re-running is safe.
+    """
+    df = df.localCheckpoint(eager=False)
+    rdd = df._jdf.queryExecution().logical().rdd()
+    try:
+        # coalesce(1) on one partition is a no-op that tells the planner
+        # so: a global aggregate or count then runs in one job, no shuffle
+        yield df.coalesce(1) if rdd.getNumPartitions() == 1 else df
+    finally:
+        rdd.unpersist(False)
 
 
 def write_partitioned(df: DataFrame, path: str, *partition_cols: str) -> None:

@@ -316,7 +316,7 @@ def test_stream_stream_interval_join_equals_batch(spark):
     assert got == want
 
 
-def test_stream_stream_outer_join_equals_batch(spark):
+def test_stream_stream_outer_join_equals_batch(spark, tmp_path):
     """Real two-stream LEFT OUTER interval join: emitted rows (matches
     AND watermark-certified nulls) must equal the batch left join.
 
@@ -335,7 +335,7 @@ def test_stream_stream_outer_join_equals_batch(spark):
     from pyspark.sql import functions as F
 
     base = _stage_events(spark, SF_SMALL)
-    stage = str(SCRATCH / "stream_stage" / f"outer_{uuid.uuid4().hex[:8]}")
+    stage = str(tmp_path / "stage")
     shutil.copytree(base, stage)
     hi = (
         spark.read.parquet(stage)
@@ -379,7 +379,7 @@ def test_stream_stream_outer_join_equals_batch(spark):
     # AFTER the one whose data advanced the watermark, so feed a second
     # sentinel and process again before stopping.
     name = f"so_{uuid.uuid4().hex[:8]}"
-    ckpt = SCRATCH / "ckpt" / uuid.uuid4().hex
+    ckpt = tmp_path / "ckpt"
     q = (
         joined.writeStream.outputMode("append")
         .format("memory")
