@@ -21,6 +21,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .sources.layout import path_exists
 from .sources.sinks import BucketedUpsertSink, upsert_append
 
 # Example config: the fixture event log with reference-style derivations
@@ -61,9 +62,13 @@ class SyncPipeline:
     the max watermark of the rows it offered, which the sink takes in
     the job that already finds the touched buckets. That is exact: a
     row the anti-join drops is already in the target, so it is never
-    above the old HWM. ``backfill()``, an append to a flat (unbucketed)
-    target and a failed sync drop this state, and the next sync reads
-    the target again.
+    above the old HWM. ``backfill()`` and a failed sync drop this
+    state, and the next sync reads the target again.
+
+    Layout: the target is the sink's hash-bucketed ``bucket=K`` layout
+    from the first sync or ``backfill()`` on; a sync into an existing
+    target without it raises and names ``backfill()``, which rewrites
+    it.
 
     PRECONDITION — single writer: while a pipeline lives, it must be its
     target's only writer. A target replaced or trimmed by anything else
@@ -76,7 +81,6 @@ class SyncPipeline:
     spark: SparkSession
     config: dict
     target_path: str
-    _runs: list[int] = field(default_factory=list)
     _sink: BucketedUpsertSink = field(init=False, repr=False)
     _hwm: object = field(default=_UNREAD, init=False, repr=False)
 
@@ -113,9 +117,7 @@ class SyncPipeline:
         Uses an explicit existence check — a read error on an existing
         target must raise, not silently restart the sync from zero.
         """
-        from .sources.sinks import _target_exists
-
-        if not _target_exists(self.spark, self.target_path):
+        if not path_exists(self.spark, self.target_path):
             return None
         t = self.spark.read.parquet(self.target_path)
         row = t.agg(F.max(self.config["watermark_col"]).alias("hwm")).first()
@@ -146,24 +148,20 @@ class SyncPipeline:
             self._forget()
             raise
         seen = self._sink.incoming_max
-        if not self._sink.incoming_max_known:  # flat target: not measured
-            self._forget()
-        elif seen is not None:
+        if seen is not None:
             self._hwm = seen if hwm is None else max(hwm, seen)
-        self._runs.append(n)
         return n
 
     def backfill(self, source: DataFrame) -> int:
-        """EP2': full reload — overwrite the target from scratch."""
+        """EP2': full reload — overwrite the target from scratch, in the
+        layout later syncs append to. Returns the rows written."""
         self._forget()
-        staged = self.project(source)
-        staged.write.mode("overwrite").parquet(self.target_path)
-        return staged.count()
+        return self._sink.replace(self.project(source))
 
     def target(self) -> DataFrame:
         # read with the sink's cached schema (no footer-inference job
         # after the first read); drop its internal hash-bucket partition
-        # column (no-op for flat/backfilled targets)
+        # column
         return self._sink.read_target(self.spark).drop("bucket")
 
 
@@ -287,7 +285,6 @@ class JdbcSyncPipeline(SyncPipeline):
                     ).jdbc(self.target_path, self.table)
             finally:
                 fresh.unpersist()
-            self._runs.append(n)
             return n
         finally:
             inc.unpersist()

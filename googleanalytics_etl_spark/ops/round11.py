@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import register
+from ..sources.layout import bucket_of, bucket_writer, hadoop_fs, path_exists
 from .round10 import (
     _DECON_SPANS_ORACLE,
     _SPANS_ORACLE,
@@ -277,26 +278,11 @@ def s_decon_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DUR_BUCKETS = 8  # fixture-sized; at 100 TB: grams / target_partition_rows
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
-
-
-def _fs_exists(spark: SparkSession, path: str) -> bool:
-    """Existence probe through the Hadoop FileSystem API, so the check
-    holds on whatever store the session writes to (HDFS/S3A/local) —
-    a driver-local ``os.path`` probe would always say "absent" for a
-    remote store and silently skip the stat partials."""
-    fs, hpath = _hadoop_fs(spark, path)
-    return bool(fs.exists(hpath))
-
-
 def _fs_data_file_count(spark: SparkSession, path: str) -> int:
     """Recursive count of data files under ``path`` (Hadoop FS API;
     `_SUCCESS`/hidden files excluded) — the small-file metric the
     compactor reports."""
-    fs, hpath = _hadoop_fs(spark, path)
+    fs, hpath = hadoop_fs(spark, path)
     if not fs.exists(hpath):
         return 0
     it = fs.listFiles(hpath, True)
@@ -342,7 +328,7 @@ def compact_durable_store(
     key; stat folding is a map-side-combinable aggregate.
     """
     manifest = str(Path(occ_dir).parent / "compacted_epochs")
-    if not _fs_exists(spark, occ_dir):  # empty store: nothing to fold
+    if not path_exists(spark, occ_dir):  # empty store: nothing to fold
         return {"epochs_folded": 0, "files_before": 0, "files_after": 0}
     before = _fs_data_file_count(spark, occ_dir) + _fs_data_file_count(
         spark, stat_dir
@@ -357,41 +343,29 @@ def compact_durable_store(
     )
     tmp_occ = occ_dir + ".compact_tmp"
     tmp_stat = stat_dir + ".compact_tmp"
-    (
-        occ_all.drop("epoch")
-        .withColumn("epoch", F.lit(_COMPACT_EPOCH))
-        .repartition(_DUR_BUCKETS, "bucket")
-        .write.mode("overwrite")
-        .partitionBy("epoch", "bucket")
-        .parquet(tmp_occ)
-    )
-    if _fs_exists(spark, stat_dir):
+    bucket_writer(
+        occ_all.withColumn("epoch", F.lit(_COMPACT_EPOCH)), _DUR_BUCKETS, "epoch"
+    ).mode("overwrite").parquet(tmp_occ)
+    if path_exists(spark, stat_dir):
         stat_all = spark.read.schema(
             "h long, cnt long, first_fk long, epoch int, bucket int"
         ).parquet(stat_dir)
-        (
-            stat_all.groupBy("bucket", "h")
-            .agg(
-                F.sum("cnt").alias("cnt"),
-                F.min("first_fk").alias("first_fk"),
-            )
-            .select(
-                "h", "cnt", "first_fk",
-                F.lit(_COMPACT_EPOCH).alias("epoch"), "bucket",
-            )
-            .repartition(_DUR_BUCKETS, "bucket")
-            .write.mode("overwrite")
-            .partitionBy("epoch", "bucket")
-            .parquet(tmp_stat)
+        folded = stat_all.groupBy("bucket", "h").agg(
+            F.sum("cnt").alias("cnt"),
+            F.min("first_fk").alias("first_fk"),
+            F.lit(_COMPACT_EPOCH).alias("epoch"),
+        )
+        bucket_writer(folded, _DUR_BUCKETS, "epoch").mode("overwrite").parquet(
+            tmp_stat
         )
     # swap: delete the fragmented store, move the compacted one in
     for src, dst in ((tmp_occ, occ_dir), (tmp_stat, stat_dir)):
-        if not _fs_exists(spark, src):
+        if not path_exists(spark, src):
             continue
-        fs, dst_p = _hadoop_fs(spark, dst)
+        fs, dst_p = hadoop_fs(spark, dst)
         if fs.exists(dst_p):
             fs.delete(dst_p, True)
-        _, src_p = _hadoop_fs(spark, src)
+        _, src_p = hadoop_fs(spark, src)
         fs.rename(src_p, dst_p)
     if epochs:
         spark.createDataFrame(
@@ -425,30 +399,27 @@ def _durable_fold_batch(
     # directory (dynamic overwrite would otherwise double its rows —
     # once compacted, once live). One tiny metadata read per batch,
     # the same role Delta's log plays for its OPTIMIZE.
-    if _fs_exists(spark, manifest):
+    if path_exists(spark, manifest):
         done = {r["epoch"] for r in spark.read.parquet(manifest).collect()}
         if int(epoch_id) in done:
             return
-    occ = _occ(batch_df.select("doc_id", "text")).withColumn(
-        "bucket", F.pmod(F.xxhash64("h"), F.lit(_DUR_BUCKETS)).cast("int")
-    )
-    (
-        # One writer per bucket (the compact_durable_store idiom): _occ
-        # spreads the gram explosion across all cores, so without this
-        # every compute task writes into every bucket directory —
-        # tasks × buckets files per epoch under the dynamic-overwrite
-        # commit (measured: the occ write was 1.3–2.1 s of each
-        # ~3 s fold, mostly commit). The extra exchange moves only the
-        # batch's gram rows (per-batch O(batch grams) is unchanged) and
-        # the store gains sized files instead of shards — the
-        # small-files control the compactor otherwise has to repair.
-        occ.repartition(_DUR_BUCKETS, "bucket")
-        .withColumn("epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch", "bucket")
-        .parquet(occ_dir)
-    )
+
+    def write_epoch(df: DataFrame, path: str) -> None:
+        # One file per bucket: _occ spreads the gram explosion across
+        # all cores, so without the bucket writer's exchange every
+        # compute task writes into every bucket directory — tasks ×
+        # buckets files per epoch under the dynamic-overwrite commit
+        # (measured: the occ write was 1.3–2.1 s of each ~3 s fold,
+        # mostly commit). The exchange moves only the batch's gram rows.
+        bucket_writer(
+            df.withColumn("bucket", bucket_of(_DUR_BUCKETS, "h")).withColumn(
+                "epoch", F.lit(int(epoch_id))
+            ),
+            _DUR_BUCKETS,
+            "epoch",
+        ).mode("overwrite").option("partitionOverwriteMode", "dynamic").parquet(path)
+
+    write_epoch(_occ(batch_df.select("doc_id", "text")), occ_dir)
     # Derive the stat partials from the postings JUST WRITTEN —
     # re-reading the epoch's columnar files costs far less than a
     # second featurization pass (split + posexplode + md5 over the
@@ -456,23 +427,12 @@ def _durable_fold_batch(
     # contract without any cache. A batch with zero grams (every
     # doc < L tokens) writes no epoch directory — nothing to stat.
     epoch_path = f"{occ_dir}/epoch={int(epoch_id)}"
-    if not _fs_exists(spark, epoch_path):
+    if not path_exists(spark, epoch_path):
         return
     epoch_occ = spark.read.schema(
         "doc_id long, pos int, h long, fk long, bucket int"
     ).parquet(epoch_path)
-    stats = _gram_stats(epoch_occ.drop("bucket")).withColumn(
-        "bucket", F.pmod(F.xxhash64("h"), F.lit(_DUR_BUCKETS)).cast("int")
-    )
-    (
-        # same one-writer-per-bucket discipline as the occ write
-        stats.repartition(_DUR_BUCKETS, "bucket")
-        .withColumn("epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch", "bucket")
-        .parquet(stat_dir)
-    )
+    write_epoch(_gram_stats(epoch_occ.drop("bucket")), stat_dir)
 
 
 def merge_durable_store(
@@ -491,7 +451,7 @@ def merge_durable_store(
     this form must match it. Reads compacted (``epoch=-1``) and live
     epoch partitions alike — the merge is the same monoid the
     compactor pre-folds."""
-    if not _fs_exists(spark, stat_dir):
+    if not path_exists(spark, stat_dir):
         return spark.createDataFrame(
             [], "doc_id long, span_start long, span_end long, span_len long"
         )

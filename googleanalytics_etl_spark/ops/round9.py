@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import register
+from ..sources.layout import bucket_of, bucket_writer
 
 # 256 planes / 16 bands x 16 bits: the band-key space (65536 per band)
 # keeps random-pair collisions ~2.4e-4 while 16 independent bands hold
@@ -692,8 +693,8 @@ def _xsi_stage(spark: SparkSession, sf_dir: str):
     buckets its own band keys hash into, and the verify join reads
     ONLY the vector buckets its candidate partners hash into —
     per-day IO bounded by the batch's key spread, never the
-    accumulated index size (the upsert_append / CDC-state layout,
-    sources/sinks.py:88)."""
+    accumulated index size (the hash-bucket layout of upsert_append and
+    the CDC state, sources/layout.py)."""
     import hashlib
     import os
     from pathlib import Path as _P
@@ -722,29 +723,18 @@ def _xsi_stage(spark: SparkSession, sf_dir: str):
                 )
             ).alias("nrm"),
         )
-        (
-            # single consumer: written to parquet exactly once below —
-            # skip the eager checkpoint (round-12 advice item)
-            banded_buckets(corpus, materialize=False)
-            .withColumn(
-                "bucket",
-                F.pmod(F.xxhash64("band", "bkey"), F.lit(_XSI_IDX_BUCKETS)),
-            )
-            .repartition("bucket")
-            .write.partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(str(_P(tmp) / "band_index"))
+        # single consumer: written to parquet exactly once below —
+        # skip the eager checkpoint (round-12 advice item)
+        idx = banded_buckets(corpus, materialize=False).withColumn(
+            "bucket", bucket_of(_XSI_IDX_BUCKETS, "band", "bkey")
         )
-        (
-            corpus.withColumn(
-                "vbucket",
-                F.pmod(F.xxhash64("vec_id"), F.lit(_XSI_VEC_BUCKETS)),
-            )
-            .repartition("vbucket")
-            .write.partitionBy("vbucket")
-            .mode("overwrite")
-            .parquet(str(_P(tmp) / "vec_store"))
+        bucket_writer(idx, _XSI_IDX_BUCKETS).mode("overwrite").parquet(
+            str(_P(tmp) / "band_index")
         )
+        vec = corpus.withColumn("vbucket", bucket_of(_XSI_VEC_BUCKETS, "vec_id"))
+        bucket_writer(vec, _XSI_VEC_BUCKETS, bucket="vbucket").mode(
+            "overwrite"
+        ).parquet(str(_P(tmp) / "vec_store"))
 
     return stage_atomic(root, _build)
 
@@ -904,13 +894,9 @@ def x_semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     bkeys = banded_buckets(batch)  # eagerly checkpointed inside
     # ≤ n_buckets ints of driver metadata — the pruning manifest
     touched = sorted(
-        r["bucket"]
-        for r in bkeys.select(
-            F.pmod(F.xxhash64("band", "bkey"), F.lit(_XSI_IDX_BUCKETS))
-            .alias("bucket")
-        )
-        .distinct()
-        .collect()
+        bkeys.agg(
+            F.collect_set(bucket_of(_XSI_IDX_BUCKETS, "band", "bkey"))
+        ).first()[0]
     )
     idx = spark.read.parquet(str(_P(root) / "band_index")).where(
         F.col("bucket").isin(touched)
@@ -949,15 +935,9 @@ def x_semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # old side: corpus partners from the PRUNED vector store + batch
     # partners from the in-memory batch frame
     vtouched = sorted(
-        r["vbucket"]
-        for r in cand.where(F.col("old_id") < 2_000_000)
-        .select(
-            F.pmod(F.xxhash64("old_id"), F.lit(_XSI_VEC_BUCKETS)).alias(
-                "vbucket"
-            )
-        )
-        .distinct()
-        .collect()
+        cand.where(F.col("old_id") < 2_000_000)
+        .agg(F.collect_set(bucket_of(_XSI_VEC_BUCKETS, "old_id")))
+        .first()[0]
     )
     vec_old = (
         spark.read.parquet(str(_P(root) / "vec_store"))

@@ -33,6 +33,8 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import fsum, register, sql_dsum
+from ..sources.layout import bucket_dirs, bucket_of, bucket_writer
+from ..sources.sinks import BucketedUpsertSink
 
 SCRATCH = Path(__file__).resolve().parents[2] / ".scratch"
 
@@ -486,10 +488,14 @@ def s_incremental_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     target on event_id (drop already-loaded) and appends — idempotent,
     exactly-once-by-key. The final target must equal the event log
     exactly once — which is the (full-hash) oracle.
+
+    The target is the bucketed ``upsert_append`` sink (sources/sinks.py),
+    one run-scoped :class:`BucketedUpsertSink` from the seed on, as in
+    ``s_paged_sync``: each batch's anti-join reads only the ``bucket=K``
+    directories its event_ids hash into.
     """
     stage = _stage_events(spark, sf_dir)
-    run_dir = _sweep_runs("sync")
-    target = run_dir / "target"
+    target = _sweep_runs("sync") / "target"
     cols = ["event_id", "ts", "user_id", "event_type", "value"]
 
     seed = (
@@ -498,12 +504,11 @@ def s_incremental_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("ts") < F.to_timestamp(F.lit("2024-01-15 00:00:00")))
         .select(cols)
     )
-    seed.write.mode("overwrite").parquet(str(target))
+    sink = BucketedUpsertSink(str(target), "event_id")
+    sink.upsert(seed, count_appended=False)
 
     def sync_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        loaded = batch_df.sparkSession.read.parquet(str(target)).select("event_id")
-        fresh = batch_df.select(cols).join(loaded, "event_id", "left_anti")
-        fresh.write.mode("append").parquet(str(target))
+        sink.upsert(batch_df.select(cols), count_appended=False)
 
     run_foreach_batch(_events_stream(spark, stage), sync_batch)
 
@@ -551,7 +556,6 @@ def s_paged_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     touched-buckets-only property per micro-batch.
     """
     from ..sources.paged import read_paged_stream
-    from ..sources.sinks import BucketedUpsertSink
 
     run_dir = _sweep_runs("paged_sync")
     target = run_dir / "target"
@@ -748,10 +752,6 @@ WHERE e.event_type <> 'error'
 _CDC_BUCKETS = 8
 
 
-def _cdc_bucket(col: str) -> F.Column:
-    return F.pmod(F.xxhash64(col), F.lit(_CDC_BUCKETS)).cast("int")
-
-
 _SWEEP_GRACE_S = 1800
 
 
@@ -814,25 +814,14 @@ def _cdc_merge_loop(
             .select("s.*")
         )
 
-    def bucket_dirs(version_dir: Path) -> dict[int, str]:
-        return {
-            int(p.name.split("=")[1]): str(p)
-            for p in version_dir.iterdir()
-            if p.name.startswith("bucket=")
-        }
+    def bucketed(df: DataFrame) -> DataFrame:
+        return df.withColumn("bucket", bucket_of(_CDC_BUCKETS, "user_id"))
 
-    # Seed: pre-cutoff state, hash-partitioned into one file per bucket.
-    # repartition on the bucket column co-locates each bucket in one
-    # task, so partitionBy emits exactly one file per bucket dir.
-    seed_dir = run_dir / "v0"
+    # Seed: pre-cutoff state, one file per bucket.
+    seed_dir = str(run_dir / "v0")
     seed = latest_per_key(log.where(F.col("ts") < cutoff).select(cols))
-    (
-        seed.withColumn("bucket", _cdc_bucket("user_id"))
-        .repartition(_CDC_BUCKETS, "bucket")
-        .write.partitionBy("bucket")
-        .parquet(str(seed_dir))
-    )
-    manifest = bucket_dirs(seed_dir)
+    bucket_writer(bucketed(seed), _CDC_BUCKETS).parquet(seed_dir)
+    manifest = bucket_dirs(spark, seed_dir)
     state = {"epoch": 0}
     epochs: list[dict] = []
     if retain_versions:
@@ -840,15 +829,9 @@ def _cdc_merge_loop(
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         sess = batch_df.sparkSession
-        changes = (
-            batch_df.where(F.col("ts") >= cutoff)
-            .select(cols)
-            .withColumn("bucket", _cdc_bucket("user_id"))
-        )
-        # ≤ _CDC_BUCKETS rows — bounded metadata, never data-scale
-        touched = sorted(
-            r["bucket"] for r in changes.select("bucket").distinct().collect()
-        )
+        changes = bucketed(batch_df.where(F.col("ts") >= cutoff).select(cols))
+        # ≤ _CDC_BUCKETS values — bounded metadata, never data-scale
+        touched = sorted(changes.agg(F.collect_set("bucket")).first()[0])
         if not touched:
             epochs.append({"touched": [], "manifest": dict(manifest)})
             return
@@ -861,18 +844,12 @@ def _cdc_merge_loop(
         # merge reads ONLY the touched buckets' files; the new version
         # dir contains ONLY the touched buckets — untouched buckets stay
         # as the files of whatever version last wrote them.
-        merged = latest_per_key(
-            cur.unionByName(changes.drop("bucket"))
-        ).withColumn("bucket", _cdc_bucket("user_id"))
+        merged = bucketed(latest_per_key(cur.unionByName(changes.drop("bucket"))))
         state["epoch"] += 1
-        new_dir = run_dir / f"v{state['epoch']}"
-        (
-            merged.repartition(len(touched), "bucket")
-            .write.partitionBy("bucket")
-            .parquet(str(new_dir))
-        )
+        new_dir = str(run_dir / f"v{state['epoch']}")
+        bucket_writer(merged, len(touched)).parquet(new_dir)
         superseded = []
-        for b, path in bucket_dirs(new_dir).items():
+        for b, path in bucket_dirs(sess, new_dir).items():
             if b in manifest:
                 superseded.append(manifest[b])
             manifest[b] = path

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from .ops.flagship import session_metrics
 from .registry import DEC
+from .sources.layout import path_exists
 
 
 def build_sessions(events: DataFrame) -> DataFrame:
@@ -128,12 +129,10 @@ def update_daily_metrics(
 
     Returns the day strings that were (re)written.
     """
-    from .sources.sinks import _target_exists
-
     daily = build_daily_metrics(events).withColumn(
         "day_str", F.date_format("day", "yyyy-MM-dd")
     )
-    if _target_exists(spark, path):
+    if path_exists(spark, path):
         # partition discovery may type day_str as a date or a string
         last_day = F.max(F.col("day_str").cast("date"))
         since = (

@@ -7,7 +7,8 @@
 - :mod:`.sinks` — JDBC append, idempotent (anti-join) upsert append,
   partitioned parquet write.
 - :mod:`.layout` — range-clustered writes (row-group skipping),
-  small-file compaction, quarantining PERMISSIVE ingest.
+  small-file compaction, quarantining PERMISSIVE ingest, and the one
+  hash-bucket layout of every keyed incremental write.
 """
 
 from .ingest import read_csv, read_json

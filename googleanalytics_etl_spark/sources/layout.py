@@ -16,25 +16,86 @@ in seconds and one that scans everything is *layout*, not compute:
   long before data volume does. Compaction rewrites to ~target-sized
   files with a shuffle-free ``coalesce``.
 
-Both utilities are size-driven (Hadoop FileSystem API — works the same
-on file://, hdfs://, s3a://), never row-count-driven: row counts need a
-scan, sizes are metadata.
+- **Hash buckets** (``bucket_of``, ``bucket_writer``, ``bucket_dirs``):
+  the one layout of every keyed incremental write — the sync target
+  (sources/sinks.py), the CDC MERGE state and the durable exact-substring
+  fold (ops/streaming.py, ops/round11.py) and the persisted band index of
+  x_semdedup_incremental (ops/round9.py). A key hashes into a hive
+  ``bucket=K`` directory; a write touches only the buckets its keys hash
+  into and gives each exactly one file; a read of a key set prunes to
+  its buckets' directories. How each caller merges (append-absent,
+  keep-latest copy-on-write, per-epoch overwrite) stays with the caller.
+
+All metadata goes through the Hadoop FileSystem API (``hadoop_fs`` —
+works the same on file://, hdfs://, s3a://); sizing is never
+row-count-driven: row counts need a scan, sizes are metadata.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, DataFrameWriter, SparkSession
+from pyspark.sql import functions as F
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` through the session's Hadoop
+    configuration — the store the session writes to, whatever its
+    scheme (a driver-local ``os.path`` probe says "absent" for a remote
+    store)."""
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), hpath
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Existence probe that never reads data: a read error on an
+    existing path must propagate, not pass for "absent"."""
+    fs, hpath = hadoop_fs(spark, path)
+    return bool(fs.exists(hpath))
 
 
 def _tree_bytes(spark: SparkSession, path: str) -> int:
     """Total bytes under ``path`` via the Hadoop FS (no data scan)."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(hconf)
+    fs, hpath = hadoop_fs(spark, path)
     return fs.getContentSummary(hpath).getLength()
+
+
+def bucket_of(n_buckets: int, *cols: str | Column) -> Column:
+    """The hash bucket of ``cols``: ``pmod(xxhash64(cols), n_buckets)``
+    as int. Stored layouts name their directories by this value, so it
+    must never change for an existing ``n_buckets``."""
+    return F.pmod(F.xxhash64(*cols), F.lit(n_buckets)).cast("int")
+
+
+def bucket_writer(
+    df: DataFrame, n_touched: int, *outer: str, bucket: str = "bucket"
+) -> DataFrameWriter:
+    """``df``'s writer, partitioned by ``(*outer, bucket)`` with exactly
+    one file per bucket directory; the caller sets mode and path.
+
+    Hash partitioning sends each bucket to one task, so each touched
+    bucket gains exactly one file per write, bounding small-file growth
+    at any scale. ``n_touched`` (≥ 1) bounds the buckets ``df`` holds;
+    capping the tasks at the cores halved a 3.4k-row sync increment's
+    write on 4 cores (32 files from 4 tasks: 0.35-0.41 s, from 32
+    tasks: 0.71-0.80 s; from one task without the shuffle: 0.43-0.58
+    s). Each ``(*outer, bucket)`` directory still gets one file, as all
+    of a bucket's rows are in one task.
+    """
+    parts = min(n_touched, df.sparkSession.sparkContext.defaultParallelism)
+    return df.repartition(parts, bucket).write.partitionBy(*outer, bucket)
+
+
+def bucket_dirs(spark: SparkSession, path: str) -> dict[int, str]:
+    """Bucket id → ``{path}/bucket=K`` for each bucket directory directly
+    under ``path`` (an existing directory)."""
+    fs, hpath = hadoop_fs(spark, path)
+    return {
+        int(name.split("=", 1)[1]): f"{path.rstrip('/')}/{name}"
+        for name in (st.getPath().getName() for st in fs.listStatus(hpath))
+        if name.startswith("bucket=")
+    }
 
 
 def cluster_write(

@@ -12,10 +12,14 @@ The reference appends typed rows to a SQL table via SQLAlchemy
   (ops/round7.py, full hash oracles); server drivers (postgres, mysql)
   are still absent and keep the tested error contract.
 - :func:`upsert_append` — insert-if-absent on a key: anti-join against
-  the current target, then append. This is the batch form the streaming
-  sync loop (ops/streaming.s_incremental_sync) reuses; on a lakehouse
-  table it becomes ``MERGE INTO`` (Delta/Iceberg jars are also not in
-  this container — documented upgrade path, same plan shape).
+  the current target, then append, into hash-bucketed ``bucket=K``
+  directories (sources/layout.py). It is the batch form the streaming
+  sync loops (ops/streaming.s_incremental_sync, s_paged_sync) run once
+  per micro-batch through one :class:`BucketedUpsertSink`, and the one
+  :class:`~googleanalytics_etl_spark.etl.SyncPipeline` runs per sync; its
+  ``backfill`` writes the same layout. On a lakehouse table it becomes
+  ``MERGE INTO`` (Delta/Iceberg jars are also not in this container —
+  documented upgrade path, same plan shape).
 - :func:`write_partitioned` — hive-style partitioned layout, the scan
   side of partition pruning at 100 TB.
 """
@@ -27,8 +31,9 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# Default hash-bucket count for upsert targets. Mirrors the CDC MERGE
-# state layout (ops/streaming._CDC_BUCKETS): at warehouse scale pick
+from .layout import bucket_dirs, bucket_of, bucket_writer, hadoop_fs, path_exists
+
+# Default hash-bucket count for upsert targets: at warehouse scale pick
 # target_bytes / desired_file_size; 32 keeps sf0.1 files sensible.
 SINK_BUCKETS = 32
 
@@ -45,32 +50,6 @@ def append_jdbc(df: DataFrame, url: str, table: str, **options: str) -> None:
             "JDBC append failed — a driver jar (e.g. postgresql) must be on "
             "spark.jars; none ships in this container"
         ) from e
-
-
-def _target_exists(spark: SparkSession, path: str) -> bool:
-    """Existence check via Hadoop FS (works for any supported scheme).
-
-    Deliberately NOT try/except around the read: a transient read error
-    on an existing target must propagate, never be mistaken for
-    "first load" — that confusion would overwrite accumulated history.
-    """
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-    return fs.exists(hpath)
-
-
-def _is_bucketed(spark: SparkSession, path: str) -> bool:
-    """True if the target uses the hive ``bucket=K`` layout."""
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-    for st in fs.listStatus(hpath):
-        if st.getPath().getName().startswith("bucket="):
-            return True
-    return False
 
 
 def upsert_append(
@@ -95,9 +74,9 @@ def upsert_append(
     pruning — ``PartitionFilters`` on the scan), and the append writes
     files only under those buckets; a re-run with no fresh keys touches
     ZERO buckets. At 100 TB this bounds each sync's IO by the incoming
-    key spread instead of the accumulated history size. Targets created
-    before bucketing (no ``bucket=`` dirs) fall back to the flat
-    full-scan anti-join.
+    key spread instead of the accumulated history size. An existing
+    target without ``bucket=`` dirs raises :class:`ValueError`; rewrite
+    it in this layout with ``SyncPipeline.backfill``.
 
     ``sink`` is a run-scoped :class:`BucketedUpsertSink` for this
     ``target_path`` and ``key`` (its ``n_buckets`` wins); without one,
@@ -140,15 +119,14 @@ class BucketedUpsertSink:
     exactly one file per upsert, but the fixed per-task cost scales with
     the cores, not with the buckets.
 
-    Watermark: given ``watermark_col``, the first-load and bucketed
-    paths also record ``incoming_max``, the max of that column over the
-    upsert's incoming rows (None if there were none), in the job that
-    already counts them or finds the touched buckets;
-    ``incoming_max_known`` says whether the last upsert measured it (the
-    flat fallback does not). Every incoming row the anti-join drops is
-    already in the target, so max(target max before, ``incoming_max``)
-    is the target max after — :class:`~googleanalytics_etl_spark.etl.SyncPipeline`
-    keeps its high-water mark this way instead of scanning the target.
+    Watermark: given ``watermark_col``, each upsert also records
+    ``incoming_max``, the max of that column over the upsert's incoming
+    rows (None if there were none), in the job that already counts them
+    or finds the touched buckets. Every incoming row the anti-join drops
+    is already in the target, so max(target max before,
+    ``incoming_max``) is the target max after —
+    :class:`~googleanalytics_etl_spark.etl.SyncPipeline` keeps its
+    high-water mark this way instead of scanning the target.
 
     PRECONDITION — single writer: the cached state/schema are valid only
     while this instance is the path's sole writer for the run. If the
@@ -173,8 +151,7 @@ class BucketedUpsertSink:
         self.n_buckets = n_buckets
         self.watermark_col = watermark_col
         self.incoming_max = None
-        self.incoming_max_known = False
-        self._state: str | None = None  # None → unprobed; "empty"/"flat"/"bucketed"
+        self._state: str | None = None  # None → unprobed; "empty"/"bucketed"
         self._schema = None  # target schema once known (incl. bucket partition col)
 
     def invalidate(self) -> None:
@@ -185,12 +162,16 @@ class BucketedUpsertSink:
 
     def _probe(self, spark: SparkSession) -> str:
         if self._state is None:
-            if not _target_exists(spark, self.target_path):
+            if not path_exists(spark, self.target_path):
                 self._state = "empty"
-            elif _is_bucketed(spark, self.target_path):
+            elif bucket_dirs(spark, self.target_path):
                 self._state = "bucketed"
             else:
-                self._state = "flat"
+                raise ValueError(
+                    f"{self.target_path} exists but has no bucket=K "
+                    "directories; rewrite it with SyncPipeline.backfill "
+                    "(the CLI's backfill command) before syncing into it"
+                )
         return self._state
 
     def read_target(self, spark: SparkSession) -> DataFrame:
@@ -205,20 +186,29 @@ class BucketedUpsertSink:
             self._schema = df.schema
         return df
 
+    def _bucketed(self, df: DataFrame) -> DataFrame:
+        return df.withColumn("bucket", bucket_of(self.n_buckets, self.key))
+
     def _write(self, df: DataFrame, n_touched: int) -> None:
-        # hash partitioning sends each bucket to one task, so each
-        # touched bucket gains exactly one file per upsert, bounding
-        # small-file growth at any scale; capping the tasks at the cores
-        # halved this write for a 3.4k-row increment on 4 cores (32
-        # files from 4 tasks: 0.35-0.41 s, from 32 tasks: 0.71-0.80 s;
-        # from one task without the shuffle: 0.43-0.58 s)
-        parts = min(n_touched, df.sparkSession.sparkContext.defaultParallelism)
-        (
-            df.repartition(parts, "bucket")
-            .write.mode("append")
-            .partitionBy("bucket")
-            .parquet(self.target_path)
-        )
+        bucket_writer(df, n_touched).mode("append").parquet(self.target_path)
+
+    def replace(self, incoming: DataFrame) -> int:
+        """Overwrite the target with ``incoming`` in the layout
+        :meth:`upsert` appends to; returns the rows written. No rows
+        leave no target, as a first upsert of no rows does."""
+        spark = incoming.sparkSession
+        self.invalidate()
+        # pinned: counted and written from one evaluation of `incoming`
+        with _pinned(self._bucketed(incoming)) as inc:
+            n = inc.count()
+            if n:
+                bucket_writer(inc, self.n_buckets).mode("overwrite").parquet(
+                    self.target_path
+                )
+        if not n:
+            fs, hpath = hadoop_fs(spark, self.target_path)
+            fs.delete(hpath, True)
+        return n
 
     def upsert(
         self, incoming: DataFrame, count_appended: bool = True
@@ -231,40 +221,27 @@ class BucketedUpsertSink:
         state = self._probe(spark)
         wm = self.watermark_col
         top = F.max(wm) if wm else F.lit(None)
-        self.incoming_max, self.incoming_max_known = None, False
-        bucket = F.pmod(
-            F.xxhash64(F.col(self.key)), F.lit(self.n_buckets)
-        ).cast("int")
-
-        if state == "flat":  # legacy flat target — full-scan anti-join
-            loaded = self.read_target(spark).select(self.key)
-            with _pinned(incoming.join(loaded, self.key, "left_anti")) as fresh:
-                n = fresh.count()
-                if n:
-                    fresh.write.mode("append").parquet(self.target_path)
-            return n if count_appended else None
+        self.incoming_max = None
 
         if state == "empty" and not count_appended and wm is None:
-            self._write(incoming.withColumn("bucket", bucket), self.n_buckets)
+            self._write(self._bucketed(incoming), self.n_buckets)
             self._state = "bucketed"
             return None
 
         # pinned: the count/touched-bucket job, the anti-join and the
         # append all observe the SAME rows even if `incoming` is
         # nondeterministic, and the first job computes them in passing
-        with _pinned(incoming.withColumn("bucket", bucket)) as inc:
+        with _pinned(self._bucketed(incoming)) as inc:
             if state == "empty":
                 # No rows → no write, so the target stays absent ("empty").
-                n, inc_max = inc.agg(F.count(F.lit(1)), top).first()
+                n, self.incoming_max = inc.agg(F.count(F.lit(1)), top).first()
                 if n:
                     self._write(inc, self.n_buckets)
                     self._state = "bucketed"
-                self.incoming_max, self.incoming_max_known = inc_max, wm is not None
                 return n if count_appended else None
 
             # ≤ n_buckets values — bounded metadata, never data-scale
             touched, self.incoming_max = inc.agg(F.collect_set("bucket"), top).first()
-            self.incoming_max_known = wm is not None
             if not touched:
                 return 0 if count_appended else None
             loaded = (

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pathlib
 
+import pytest
 from conftest import SF_SMALL
 
 from googleanalytics_etl_spark.io import load
@@ -54,14 +55,20 @@ def test_sink_replay_touches_zero_files(spark, tmp_path):
     assert _files(t) == before
 
 
-def test_sink_flat_target_fallback(spark, tmp_path):
+def test_sink_rejects_unbucketed_target(spark, tmp_path):
+    """An existing target without ``bucket=K`` dirs is refused with an
+    error naming the way to rewrite it, and is left as it was."""
     ev = load(spark, SF_SMALL, "events").select("event_id", "user_id")
     t = tmp_path / "flat"
-    ev.where("event_id < 100").write.parquet(str(t))  # legacy layout
-    sink = BucketedUpsertSink(str(t), "event_id")
-    n = sink.upsert(ev, count_appended=True)
-    assert n == ev.count() - 100
-    assert spark.read.parquet(str(t)).count() == ev.count()
+    ev.where("event_id < 100").write.parquet(str(t))  # no bucket layout
+    before = _files(t)
+    for counted in (True, False):
+        with pytest.raises(ValueError, match="backfill"):
+            BucketedUpsertSink(str(t), "event_id").upsert(ev, count_appended=counted)
+    with pytest.raises(ValueError, match="backfill"):
+        upsert_append(spark, ev, str(t), "event_id")
+    assert _files(t) == before
+    assert spark.read.parquet(str(t)).count() == 100
 
 
 def test_parallel_stream_reader_matches_simple(spark, tmp_path):

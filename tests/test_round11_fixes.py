@@ -55,7 +55,7 @@ def test_phase_controls_are_headline_keys():
 
 
 def test_fs_exists_probes_hadoop_filesystem(spark, tmp_path):
-    from googleanalytics_etl_spark.ops.round11 import _fs_exists
+    from googleanalytics_etl_spark.sources.layout import path_exists as _fs_exists
 
     present = tmp_path / "present"
     present.mkdir()

@@ -129,12 +129,12 @@ def test_durable_store_compaction_preserves_spans_and_blocks_replay(spark):
     from googleanalytics_etl_spark.io import load
     from googleanalytics_etl_spark.ops.round11 import (
         _durable_fold_batch,
-        _fs_exists,
         compact_durable_store,
         merge_durable_store,
         s_exact_substring_durable,
     )
     from googleanalytics_etl_spark.ops.streaming import SCRATCH
+    from googleanalytics_etl_spark.sources.layout import path_exists as _fs_exists
 
     spans_before = sorted(
         map(tuple, s_exact_substring_durable(spark, SF_SMALL).collect())

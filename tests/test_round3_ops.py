@@ -112,11 +112,10 @@ def test_cdc_pruned_rewrite_leaves_untouched_buckets_alone(spark, tmp_path):
     buckets must keep their seed (v0) files — same path, same bytes —
     across every micro-batch version."""
     import os
+    from pathlib import Path
 
-    from googleanalytics_etl_spark.ops.streaming import (
-        _cdc_bucket,
-        _cdc_merge_loop,
-    )
+    from googleanalytics_etl_spark.ops.streaming import _CDC_BUCKETS, _cdc_merge_loop
+    from googleanalytics_etl_spark.sources.layout import bucket_of
 
     # synthetic changelog: 40 seed users (several buckets), then a
     # post-cutoff tail touching ONLY user 7's bucket
@@ -137,7 +136,9 @@ def test_cdc_pruned_rewrite_leaves_untouched_buckets_alone(spark, tmp_path):
 
     manifest, epochs = _cdc_merge_loop(spark, str(tmp_path))
     hot_bucket = (
-        spark.range(1).select(_cdc_bucket(F.lit(hot).cast("bigint"))).first()[0]
+        spark.range(1)
+        .select(bucket_of(_CDC_BUCKETS, F.lit(hot).cast("bigint")))
+        .first()[0]
     )
     assert len(manifest) > 1, "fixture must occupy several buckets"
     assert any(e["touched"] for e in epochs), "no batch carried changes"
@@ -154,6 +155,14 @@ def test_cdc_pruned_rewrite_leaves_untouched_buckets_alone(spark, tmp_path):
             if b != hot_bucket:
                 assert "/v0/" in p + "/", f"bucket {b} left seed dir: {p}"
                 assert p == manifest[b]
+    # every version dir (the seed and each batch) holds exactly one file
+    # per bucket it wrote; superseded bucket dirs are gone
+    run = Path(manifest[hot_bucket]).parents[1]
+    per_bucket = {
+        str(d.relative_to(run)): len(list(d.glob("*.parquet")))
+        for d in run.glob("v*/bucket=*")
+    }
+    assert per_bucket and set(per_bucket.values()) == {1}, per_bucket
     # untouched bucket files: same names, same mtimes (never rewritten)
     for b, p in manifest.items():
         if b == hot_bucket:

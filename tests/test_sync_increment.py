@@ -116,26 +116,30 @@ def test_sync_counts_new_overlapping_and_replayed_increments(spark, tmp_path):
 
 def test_bucketed_sync_runs_a_bounded_number_of_jobs(spark, tmp_path):
     log = _log()
-    pipe = SyncPipeline(spark, EXAMPLE_CONFIG, str(tmp_path / "target"))
     incs = [
         _write_increment(log.slice(lo, 250), tmp_path / f"inc{lo}")
         for lo in (0, 250, 500)
     ]
-    pipe.sync(read_paged(spark, incs[0]))  # first load
-    pipe.sync(read_paged(spark, incs[1]))  # reads the target's schema once
     sc = spark.sparkContext
-    sc.setJobGroup("sync-job-guard", "one sync", False)
-    try:
-        assert pipe.sync(read_paged(spark, incs[2])) > 0
-    finally:
-        sc._jsc.clearJobGroup()
     tracker = sc.statusTracker()
-    jobs = sorted(tracker.getJobIdsForGroup("sync-job-guard"))
-    stages = [list(tracker.getJobInfo(j).stageIds) for j in jobs]
-    assert len(jobs) <= JOBS_PER_SYNC, (
-        f"one sync ran {len(jobs)} Spark jobs (stages per job: {stages}); "
-        f"at most {JOBS_PER_SYNC} expected — a pass over the increment came back"
-    )
+    # the target created by a first sync, and by a backfill
+    for start in ("sync", "backfill"):
+        pipe = SyncPipeline(spark, EXAMPLE_CONFIG, str(tmp_path / f"{start}_target"))
+        getattr(pipe, start)(read_paged(spark, incs[0]))  # first load
+        pipe.sync(read_paged(spark, incs[1]))  # reads the target's schema once
+        group = f"sync-job-guard-{start}"
+        sc.setJobGroup(group, "one sync", False)
+        try:
+            assert pipe.sync(read_paged(spark, incs[2])) > 0
+        finally:
+            sc._jsc.clearJobGroup()
+        jobs = sorted(tracker.getJobIdsForGroup(group))
+        stages = [list(tracker.getJobInfo(j).stageIds) for j in jobs]
+        assert len(jobs) <= JOBS_PER_SYNC, (
+            f"one sync after a first {start} ran {len(jobs)} Spark jobs (stages "
+            f"per job: {stages}); at most {JOBS_PER_SYNC} expected — a pass "
+            "over the increment or the target came back"
+        )
 
 
 def test_syncs_leave_no_pinned_blocks(spark, tmp_path):

@@ -97,20 +97,30 @@ def test_hwm_read_once_per_pipeline(spark, tmp_path, monkeypatch):
 
 
 def test_backfill_then_sync_reprobes(spark, tmp_path, monkeypatch):
-    pipe = SyncPipeline(spark, EXAMPLE_CONFIG, str(tmp_path / "hits"))
+    target = tmp_path / "hits"
+    pipe = SyncPipeline(spark, EXAMPLE_CONFIG, str(target))
     pipe.sync(_events(spark, FIRST))
     assert pipe._hwm is not _UNREAD
     assert pipe.backfill(_events(spark, FIRST + SECOND)) == 6
     assert pipe._hwm is _UNREAD and pipe._sink._state is None
+    # backfill writes the layout syncs append to: one file per bucket
+    files = _bucket_files(target)
+    assert files and all(b.startswith("bucket=") for b in files)
+    assert all(len(f) == 1 for f in files.values())
 
     calls = _counting_hwm(pipe, monkeypatch)
     assert pipe.sync(_events(spark, SECOND + LATE)) == 1
-    assert len(calls) == 1
-    # a backfilled target is flat: its append drops the state again
-    assert pipe._hwm is _UNREAD
-    assert pipe.sync(_events(spark, FIRST + LATE)) == 0
-    assert len(calls) == 2
+    assert pipe.sync(_events(spark, FIRST + LATE)) == 0  # a replay
+    assert len(calls) == 1  # the syncs after a backfill read the HWM once
+    assert pipe._sink._state == "bucketed"
     assert pipe.target().count() == 7
+    monkeypatch.undo()
+    assert pipe._hwm == pipe.high_water_mark()
+
+    # a reload from an empty source leaves no target, like a fresh one
+    assert pipe.backfill(_events(spark, [])) == 0
+    assert not target.exists() and pipe.high_water_mark() is None
+    assert pipe.sync(_events(spark, FIRST)) == 3
 
 
 def test_failed_sync_drops_cached_state(spark, tmp_path, monkeypatch):
