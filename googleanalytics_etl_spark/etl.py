@@ -11,6 +11,12 @@ already-loaded hit ids, and appends [REF-UNVERIFIED: SURVEY.md §3.1].
 ``scan → project/cast → derive → anti-join(target) → append``. The same
 config drives the batch path here and the streaming path in
 ops/streaming.py — identical semantics, per the §1.2 contract.
+
+The target is laid out by the day of its watermark (``wm_day=D``
+directories, sources/layout.py): an increment's anti-join reads, and
+its append writes, only the days its rows fall into — the reference's
+re-extract window, as :class:`JdbcSyncPipeline` bounds its id read by
+the window's watermark range.
 """
 
 from __future__ import annotations
@@ -21,7 +27,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .sources.layout import path_exists
+from .sources.layout import WM_DAY, bucket_dirs, day_of, path_exists
 from .sources.sinks import BucketedUpsertSink, upsert_append
 
 # Example config: the fixture event log with reference-style derivations
@@ -48,6 +54,48 @@ EXAMPLE_CONFIG: dict = {
 _UNREAD = object()
 
 
+def _references(expr) -> set[str]:
+    """Lower-cased column names a parsed (unresolved) Catalyst
+    expression reads. Names inside a lambda body count too: the parser
+    leaves them all as lambda variables until analysis."""
+    names, stack = set(), [expr]
+    while stack:
+        e = stack.pop()
+        if e.getClass().getSimpleName() in (
+            "UnresolvedAttribute", "UnresolvedNamedLambdaVariable"
+        ):
+            names.add(e.nameParts().head().lower())
+        kids = e.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return names
+
+
+def _require_key_on_watermark(spark: SparkSession, config: dict) -> None:
+    """Refuse a config whose key is not computed from its watermark
+    column. The target is laid out by watermark day and a sync's
+    anti-join reads only the days its increment touches; that finds
+    every loaded copy of a key only if the key fixes the watermark.
+    The derived SQL is parsed by Spark and its references followed
+    through earlier derived columns."""
+    parse = spark._jsparkSession.sessionState().sqlParser().parseExpression
+    # column → the columns it is computed from, itself included
+    lineage = {tgt.lower(): {tgt.lower()} for tgt, _ in config["columns"].values()}
+    for name, expr in config.get("derived", {}).items():
+        refs = _references(parse(expr))
+        lineage[name.lower()] = {name.lower()}.union(
+            *(lineage.get(r, {r}) for r in refs)
+        )
+    key, wm = config["key"], config["watermark_col"]
+    if wm.lower() not in lineage.get(key.lower(), {key.lower()}):
+        raise ValueError(
+            f"key {key!r} is not computed from the watermark column {wm!r}: "
+            "the sync target is laid out by the watermark's day and each "
+            "sync's anti-join reads only the days its increment touches, "
+            "which finds every loaded copy of a key only if the key fixes "
+            f"the watermark; derive the key from {wm!r}"
+        )
+
+
 @dataclass
 class SyncPipeline:
     """Config-driven incremental sync: the reference's ``.sync()``.
@@ -65,10 +113,16 @@ class SyncPipeline:
     above the old HWM. ``backfill()`` and a failed sync drop this
     state, and the next sync reads the target again.
 
-    Layout: the target is the sink's hash-bucketed ``bucket=K`` layout
-    from the first sync or ``backfill()`` on; a sync into an existing
-    target without it raises and names ``backfill()``, which rewrites
-    it.
+    Layout: from the first sync or ``backfill()`` on, the target is
+    bucketed by the day of ``watermark_col`` (``wm_day=D``, one file per
+    touched day per write). A sync's anti-join scan is pruned to the
+    days of the rows it offers, so it reads O(the increment's days), not
+    O(history). That is exact only if every copy of a key has the same
+    watermark, so the key must be computed from ``watermark_col``
+    (``EXAMPLE_CONFIG``'s ``hit_id`` hashes ``hit_ts``); the constructor
+    refuses any other config. A sync into an existing target without
+    ``wm_day=`` directories (the ``bucket=K`` or flat layout of an
+    older version) raises and names ``backfill()``, which rewrites it.
 
     PRECONDITION — single writer: while a pipeline lives, it must be its
     target's only writer. A target replaced or trimmed by anything else
@@ -85,10 +139,13 @@ class SyncPipeline:
     _hwm: object = field(default=_UNREAD, init=False, repr=False)
 
     def __post_init__(self) -> None:
+        _require_key_on_watermark(self.spark, self.config)
+        wm = self.config["watermark_col"]
         self._sink = BucketedUpsertSink(
             self.target_path,
             self.config["key"],
-            watermark_col=self.config["watermark_col"],
+            watermark_col=wm,
+            bucket=(WM_DAY, day_of(wm)),
         )
 
     def _forget(self) -> None:
@@ -114,14 +171,20 @@ class SyncPipeline:
     def high_water_mark(self):
         """Read max(watermark_col) from the target (None if no target).
 
-        Uses an explicit existence check — a read error on an existing
+        Reads the newest day partition only: the day is a function of
+        the watermark, so the max lies there. The read goes through the
+        sink, which infers the target's schema once per pipeline. Uses
+        an explicit existence check — a read error on an existing
         target must raise, not silently restart the sync from zero.
         """
         if not path_exists(self.spark, self.target_path):
             return None
-        t = self.spark.read.parquet(self.target_path)
-        row = t.agg(F.max(self.config["watermark_col"]).alias("hwm")).first()
-        return row["hwm"]
+        dirs = bucket_dirs(self.spark, self.target_path, WM_DAY)
+        days = [d for d in dirs if d is not None]
+        if not days:  # null watermarks only, or not this layout
+            return None
+        newest = self._sink.read_target(self.spark).where(F.col(WM_DAY) == max(days))
+        return newest.agg(F.max(self.config["watermark_col"])).first()[0]
 
     def sync(self, source: DataFrame, reextract_overlap: str = "1 hour") -> int:
         """Incremental sync: extract the tail since HWM (minus a trailing
@@ -160,9 +223,9 @@ class SyncPipeline:
 
     def target(self) -> DataFrame:
         # read with the sink's cached schema (no footer-inference job
-        # after the first read); drop its internal hash-bucket partition
-        # column
-        return self._sink.read_target(self.spark).drop("bucket")
+        # after the first read); drop its internal watermark-day
+        # partition column
+        return self._sink.read_target(self.spark).drop(WM_DAY)
 
 
 @dataclass

@@ -8,7 +8,8 @@
   partitioned parquet write.
 - :mod:`.layout` — range-clustered writes (row-group skipping),
   small-file compaction, quarantining PERMISSIVE ingest, and the one
-  hash-bucket layout of every keyed incremental write.
+  bucket layout (key hash or watermark day) of every keyed incremental
+  write.
 """
 
 from .ingest import read_csv, read_json

@@ -16,15 +16,19 @@ in seconds and one that scans everything is *layout*, not compute:
   long before data volume does. Compaction rewrites to ~target-sized
   files with a shuffle-free ``coalesce``.
 
-- **Hash buckets** (``bucket_of``, ``bucket_writer``, ``bucket_dirs``):
-  the one layout of every keyed incremental write — the sync target
-  (sources/sinks.py), the CDC MERGE state and the durable exact-substring
-  fold (ops/streaming.py, ops/round11.py) and the persisted band index of
-  x_semdedup_incremental (ops/round9.py). A key hashes into a hive
-  ``bucket=K`` directory; a write touches only the buckets its keys hash
-  into and gives each exactly one file; a read of a key set prunes to
-  its buckets' directories. How each caller merges (append-absent,
-  keep-latest copy-on-write, per-epoch overwrite) stays with the caller.
+- **Buckets** (``bucket_of``, ``day_of``, ``bucket_writer``,
+  ``bucket_dirs``): the one layout of every keyed incremental write. A
+  row goes to a hive ``{column}=K`` directory; a write touches only the
+  buckets its rows fall into and gives each exactly one file; a read of
+  a row set prunes to its buckets' directories. The bucket is either a
+  hash of the key (``bucket_of``, ``bucket=K``: the streaming upsert
+  keys (sources/sinks.py), the CDC MERGE state and the durable
+  exact-substring fold (ops/streaming.py, ops/round11.py) and the
+  persisted band index of x_semdedup_incremental (ops/round9.py)) or
+  the day of a watermark (``day_of``, ``wm_day=D``: the
+  :class:`~googleanalytics_etl_spark.etl.SyncPipeline` target). How
+  each caller merges (append-absent, keep-latest copy-on-write,
+  per-epoch overwrite) stays with the caller.
 
 All metadata goes through the Hadoop FileSystem API (``hadoop_fs`` —
 works the same on file://, hdfs://, s3a://); sizing is never
@@ -68,6 +72,19 @@ def bucket_of(n_buckets: int, *cols: str | Column) -> Column:
     return F.pmod(F.xxhash64(*cols), F.lit(n_buckets)).cast("int")
 
 
+# The directory name of the watermark-day layout (``wm_day=D``); a
+# distinct name, so a ``bucket=K`` target is never read as day partitions.
+WM_DAY = "wm_day"
+
+
+def day_of(col: str | Column) -> Column:
+    """The watermark-day bucket of ``col``: its date as days since
+    1970-01-01 (int; null for a null watermark). Monotone in ``col``,
+    so the newest day holds the column's max. Stored layouts name their
+    ``wm_day=D`` directories by this value, so it must never change."""
+    return F.unix_date(F.to_date(col))
+
+
 def bucket_writer(
     df: DataFrame, n_touched: int, *outer: str, bucket: str = "bucket"
 ) -> DataFrameWriter:
@@ -87,15 +104,25 @@ def bucket_writer(
     return df.repartition(parts, bucket).write.partitionBy(*outer, bucket)
 
 
-def bucket_dirs(spark: SparkSession, path: str) -> dict[int, str]:
-    """Bucket id → ``{path}/bucket=K`` for each bucket directory directly
-    under ``path`` (an existing directory)."""
+# the directory value Spark writes for a null partition value
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def bucket_dirs(
+    spark: SparkSession, path: str, column: str = "bucket"
+) -> dict[int | None, str]:
+    """Bucket id → ``{path}/{column}=K`` for each bucket directory
+    directly under ``path`` (an existing directory); the directory of
+    null buckets has id None."""
     fs, hpath = hadoop_fs(spark, path)
-    return {
-        int(name.split("=", 1)[1]): f"{path.rstrip('/')}/{name}"
-        for name in (st.getPath().getName() for st in fs.listStatus(hpath))
-        if name.startswith("bucket=")
-    }
+    dirs: dict[int | None, str] = {}
+    for st in fs.listStatus(hpath):
+        name = st.getPath().getName()
+        col, _, value = name.partition("=")
+        if col == column:
+            bucket = None if value == _NULL_PARTITION else int(value)
+            dirs[bucket] = f"{path.rstrip('/')}/{name}"
+    return dirs
 
 
 def cluster_write(

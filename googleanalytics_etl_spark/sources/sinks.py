@@ -12,11 +12,13 @@ The reference appends typed rows to a SQL table via SQLAlchemy
   (ops/round7.py, full hash oracles); server drivers (postgres, mysql)
   are still absent and keep the tested error contract.
 - :func:`upsert_append` — insert-if-absent on a key: anti-join against
-  the current target, then append, into hash-bucketed ``bucket=K``
-  directories (sources/layout.py). It is the batch form the streaming
-  sync loops (ops/streaming.s_incremental_sync, s_paged_sync) run once
-  per micro-batch through one :class:`BucketedUpsertSink`, and the one
-  :class:`~googleanalytics_etl_spark.etl.SyncPipeline` runs per sync; its
+  the current target, then append, into bucket directories
+  (sources/layout.py). It is the batch form the streaming sync loops
+  (ops/streaming.s_incremental_sync, s_paged_sync) run once per
+  micro-batch through one :class:`BucketedUpsertSink`, hash-bucketed
+  on the key (``bucket=K``), and the one
+  :class:`~googleanalytics_etl_spark.etl.SyncPipeline` runs per sync,
+  bucketed by the day of its watermark (``wm_day=D``); its
   ``backfill`` writes the same layout. On a lakehouse table it becomes
   ``MERGE INTO`` (Delta/Iceberg jars are also not in this container —
   documented upgrade path, same plan shape).
@@ -28,13 +30,18 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import NullType
 
 from .layout import bucket_dirs, bucket_of, bucket_writer, hadoop_fs, path_exists
 
-# Default hash-bucket count for upsert targets: at warehouse scale pick
-# target_bytes / desired_file_size; 32 keeps sf0.1 files sensible.
+# Default hash-bucket count of an upsert target bucketed on its key: the
+# streaming sync keys (s_incremental_sync, s_paged_sync) and a stateless
+# upsert_append. The SyncPipeline target is bucketed by watermark day
+# instead; the CDC state, the durable fold and the xsi index hash-bucket
+# with their own counts. At warehouse scale pick target_bytes /
+# desired_file_size; 32 keeps sf0.1 files sensible.
 SINK_BUCKETS = 32
 
 
@@ -67,20 +74,19 @@ def upsert_append(
     read failure on an existing target raises (it is never treated as an
     empty target).
 
-    Layout: the target is hash-bucketed on ``key`` into hive
-    ``bucket=K`` directories (K = xxhash64(key) mod ``n_buckets``), the
-    same pruned shape as the CDC MERGE state. The anti-join then reads
-    ONLY the buckets the incoming batch's keys hash into (hive partition
-    pruning — ``PartitionFilters`` on the scan), and the append writes
-    files only under those buckets; a re-run with no fresh keys touches
-    ZERO buckets. At 100 TB this bounds each sync's IO by the incoming
-    key spread instead of the accumulated history size. An existing
-    target without ``bucket=`` dirs raises :class:`ValueError`; rewrite
-    it in this layout with ``SyncPipeline.backfill``.
+    Layout: without ``sink``, the target is hash-bucketed on ``key``
+    into hive ``bucket=K`` directories (K = xxhash64(key) mod
+    ``n_buckets``), the same pruned shape as the CDC MERGE state. The
+    anti-join then reads ONLY the buckets the incoming rows fall into
+    (hive partition pruning — ``PartitionFilters`` on the scan), and
+    the append writes files only under those buckets; a re-run with no
+    fresh keys touches ZERO buckets. An existing target without the
+    sink's bucket dirs raises :class:`ValueError`; rewrite it in this
+    layout with ``SyncPipeline.backfill``.
 
     ``sink`` is a run-scoped :class:`BucketedUpsertSink` for this
-    ``target_path`` and ``key`` (its ``n_buckets`` wins); without one,
-    the target is probed afresh.
+    ``target_path`` and ``key`` (its bucket wins); without one, the
+    target is probed afresh.
     """
     if sink is None:
         sink = BucketedUpsertSink(target_path, key, n_buckets)
@@ -114,7 +120,18 @@ class BucketedUpsertSink:
     the same tests (tests/test_streaming.py asserts appended files land
     only under incoming-key buckets when driven through this sink).
 
-    Appends hash-partition on ``bucket`` into min(touched buckets,
+    Bucket: ``bucket`` is ``(column, int expression)``, the hive
+    partition each row is written under; the default is the hash of the
+    key, ``("bucket", bucket_of(n_buckets, key))``. Pruning the
+    anti-join to the incoming rows' buckets is exact only if every copy
+    of a key falls into one bucket: a function of the key always does;
+    :class:`~googleanalytics_etl_spark.etl.SyncPipeline` buckets by the
+    day of its watermark (``wm_day=D``) and refuses a key that is not
+    computed from the watermark. A row whose bucket is null is written
+    under the null directory, and the anti-join reads that directory
+    whenever the increment holds such a row.
+
+    Appends hash-partition on the bucket into min(touched buckets,
     ``defaultParallelism``) tasks: every touched bucket still gains
     exactly one file per upsert, but the fixed per-task cost scales with
     the cores, not with the buckets.
@@ -122,8 +139,8 @@ class BucketedUpsertSink:
     Watermark: given ``watermark_col``, each upsert also records
     ``incoming_max``, the max of that column over the upsert's incoming
     rows (None if there were none), in the job that already counts them
-    or finds the touched buckets. Every incoming row the anti-join drops
-    is already in the target, so max(target max before,
+    and finds the touched buckets. Every incoming row the anti-join
+    drops is already in the target, so max(target max before,
     ``incoming_max``) is the target max after —
     :class:`~googleanalytics_etl_spark.etl.SyncPipeline` keeps its
     high-water mark this way instead of scanning the target.
@@ -145,11 +162,13 @@ class BucketedUpsertSink:
         key: str,
         n_buckets: int = SINK_BUCKETS,
         watermark_col: str | None = None,
+        bucket: tuple[str, Column] | None = None,
     ) -> None:
         self.target_path = target_path
         self.key = key
         self.n_buckets = n_buckets
         self.watermark_col = watermark_col
+        self.bucket_col, self._bucket = bucket or ("bucket", bucket_of(n_buckets, key))
         self.incoming_max = None
         self._state: str | None = None  # None → unprobed; "empty"/"bucketed"
         self._schema = None  # target schema once known (incl. bucket partition col)
@@ -164,11 +183,11 @@ class BucketedUpsertSink:
         if self._state is None:
             if not path_exists(spark, self.target_path):
                 self._state = "empty"
-            elif bucket_dirs(spark, self.target_path):
+            elif bucket_dirs(spark, self.target_path, self.bucket_col):
                 self._state = "bucketed"
             else:
                 raise ValueError(
-                    f"{self.target_path} exists but has no bucket=K "
+                    f"{self.target_path} exists but has no {self.bucket_col}=K "
                     "directories; rewrite it with SyncPipeline.backfill "
                     "(the CLI's backfill command) before syncing into it"
                 )
@@ -179,18 +198,44 @@ class BucketedUpsertSink:
         reader = spark.read
         if self._schema is not None:
             # cached schema skips the per-batch footer-inference pass;
-            # partition discovery (bucket=K dirs) still prunes as usual
+            # partition discovery (bucket dirs) still prunes as usual
             reader = reader.schema(self._schema)
         df = reader.parquet(self.target_path)
-        if self._schema is None:
+        # a target of null buckets only gives its bucket column no type
+        # yet; a schema read from it would null every later bucket
+        if self._schema is None and not isinstance(
+            df.schema[self.bucket_col].dataType, NullType
+        ):
             self._schema = df.schema
         return df
 
     def _bucketed(self, df: DataFrame) -> DataFrame:
-        return df.withColumn("bucket", bucket_of(self.n_buckets, self.key))
+        return df.withColumn(self.bucket_col, self._bucket)
+
+    def _touched(self, inc: DataFrame) -> tuple[int, Column, int]:
+        """One job over the pinned ``inc``: its row count, a filter on
+        the bucket column that keeps the buckets its rows fall into, and
+        how many those are (≤ the distinct buckets — bounded metadata,
+        never data-scale). Records ``incoming_max`` in passing."""
+        b = F.col(self.bucket_col)
+        wm = self.watermark_col
+        n, touched, nulls, self.incoming_max = inc.agg(
+            F.count(F.lit(1)),
+            F.collect_set(b),  # drops nulls; `nulls` says if there were any
+            F.max(b.isNull()),
+            F.max(wm) if wm else F.lit(None),
+        ).first()
+        pruned = (b.isin(touched) | b.isNull()) if nulls else b.isin(touched)
+        return n, pruned, len(touched) + bool(nulls)
 
     def _write(self, df: DataFrame, n_touched: int) -> None:
-        bucket_writer(df, n_touched).mode("append").parquet(self.target_path)
+        bucket_writer(df, n_touched, bucket=self.bucket_col).mode("append").parquet(
+            self.target_path
+        )
+
+    def _drop_target(self, spark: SparkSession) -> None:
+        fs, hpath = hadoop_fs(spark, self.target_path)
+        fs.delete(hpath, True)
 
     def replace(self, incoming: DataFrame) -> int:
         """Overwrite the target with ``incoming`` in the layout
@@ -200,14 +245,16 @@ class BucketedUpsertSink:
         self.invalidate()
         # pinned: counted and written from one evaluation of `incoming`
         with _pinned(self._bucketed(incoming)) as inc:
-            n = inc.count()
+            n, _, n_touched = self._touched(inc)
             if n:
-                bucket_writer(inc, self.n_buckets).mode("overwrite").parquet(
+                # static: the whole old target goes, whatever its layout
+                bucket_writer(inc, n_touched, bucket=self.bucket_col).mode(
+                    "overwrite"
+                ).option("partitionOverwriteMode", "static").parquet(
                     self.target_path
                 )
         if not n:
-            fs, hpath = hadoop_fs(spark, self.target_path)
-            fs.delete(hpath, True)
+            self._drop_target(spark)
         return n
 
     def upsert(
@@ -219,40 +266,40 @@ class BucketedUpsertSink:
         plan runs once, inside the write."""
         spark = incoming.sparkSession
         state = self._probe(spark)
-        wm = self.watermark_col
-        top = F.max(wm) if wm else F.lit(None)
         self.incoming_max = None
 
-        if state == "empty" and not count_appended and wm is None:
+        if state == "empty" and not count_appended and self.watermark_col is None:
+            # written without looking at the rows: no rows leave only
+            # _SUCCESS, which is no target, so the target stays "empty"
             self._write(self._bucketed(incoming), self.n_buckets)
-            self._state = "bucketed"
+            if bucket_dirs(spark, self.target_path, self.bucket_col):
+                self._state = "bucketed"
+            else:
+                self._drop_target(spark)
             return None
 
         # pinned: the count/touched-bucket job, the anti-join and the
         # append all observe the SAME rows even if `incoming` is
         # nondeterministic, and the first job computes them in passing
         with _pinned(self._bucketed(incoming)) as inc:
+            n, pruned, n_touched = self._touched(inc)
+            if not n:
+                # no rows → no write, so an absent target stays "empty"
+                return 0 if count_appended else None
             if state == "empty":
-                # No rows → no write, so the target stays absent ("empty").
-                n, self.incoming_max = inc.agg(F.count(F.lit(1)), top).first()
-                if n:
-                    self._write(inc, self.n_buckets)
-                    self._state = "bucketed"
+                self._write(inc, n_touched)
+                self._state = "bucketed"
                 return n if count_appended else None
 
-            # ≤ n_buckets values — bounded metadata, never data-scale
-            touched, self.incoming_max = inc.agg(F.collect_set("bucket"), top).first()
-            if not touched:
-                return 0 if count_appended else None
             loaded = (
                 self.read_target(spark)
-                .where(F.col("bucket").isin(touched))  # dir-pruned scan
+                .where(pruned)  # dir-pruned scan
                 .select(self.key)
             )
             anti = inc.join(loaded, self.key, "left_anti")
             if not count_appended:
                 # single evaluation of the anti-join, inside the write
-                self._write(anti, len(touched))
+                self._write(anti, n_touched)
                 return None
             # the count evaluates the anti-join once against the target
             # as it was; the write reads those rows back. (A persisted
@@ -261,7 +308,7 @@ class BucketedUpsertSink:
             with _pinned(anti) as fresh:
                 n = fresh.count()
                 if n:
-                    self._write(fresh, len(touched))
+                    self._write(fresh, n_touched)
             return n
 
 

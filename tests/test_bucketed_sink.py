@@ -71,6 +71,18 @@ def test_sink_rejects_unbucketed_target(spark, tmp_path):
     assert spark.read.parquet(str(t)).count() == 100
 
 
+def test_sink_empty_uncounted_first_write_leaves_no_target(spark, tmp_path):
+    """An uncounted first write of no rows leaves no target (Spark would
+    leave only ``_SUCCESS``), so the next upsert is a first write too."""
+    t = tmp_path / "t"
+    sink = BucketedUpsertSink(str(t), "id")
+    assert sink.upsert(spark.range(0), count_appended=False) is None
+    assert not t.exists() and sink._state == "empty"
+    assert sink.upsert(spark.range(5), count_appended=False) is None
+    assert sorted(r.id for r in spark.read.parquet(str(t)).collect()) == list(range(5))
+    assert upsert_append(spark, spark.range(7), str(t), "id") == 2
+
+
 def test_parallel_stream_reader_matches_simple(spark, tmp_path):
     from googleanalytics_etl_spark.sources.paged import read_paged_stream
 

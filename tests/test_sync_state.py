@@ -103,9 +103,9 @@ def test_backfill_then_sync_reprobes(spark, tmp_path, monkeypatch):
     assert pipe._hwm is not _UNREAD
     assert pipe.backfill(_events(spark, FIRST + SECOND)) == 6
     assert pipe._hwm is _UNREAD and pipe._sink._state is None
-    # backfill writes the layout syncs append to: one file per bucket
+    # backfill writes the layout syncs append to: one file per day
     files = _bucket_files(target)
-    assert files and all(b.startswith("bucket=") for b in files)
+    assert sorted(files) == ["wm_day=19723", "wm_day=19724"]  # 2024-01-01, -02
     assert all(len(f) == 1 for f in files.values())
 
     calls = _counting_hwm(pipe, monkeypatch)
@@ -121,6 +121,30 @@ def test_backfill_then_sync_reprobes(spark, tmp_path, monkeypatch):
     assert pipe.backfill(_events(spark, [])) == 0
     assert not target.exists() and pipe.high_water_mark() is None
     assert pipe.sync(_events(spark, FIRST)) == 3
+
+
+def test_sync_rejects_hash_bucketed_target(spark, tmp_path):
+    """A target in the ``bucket=K`` hash layout an older version wrote
+    is not read as day partitions (that would prune to no directory and
+    append every row again): a sync raises naming
+    ``SyncPipeline.backfill`` and leaves its files as they were, and a
+    backfill rewrites it by watermark day."""
+    target = tmp_path / "hits"
+    pipe = SyncPipeline(spark, EXAMPLE_CONFIG, str(target))
+    old = BucketedUpsertSink(str(target), "hit_id", watermark_col="hit_ts")
+    assert old.upsert(pipe.project(_events(spark, FIRST))) == 3
+    before = _bucket_files(target)
+    assert before and all(b.startswith("bucket=") for b in before)
+    for rows in (SECOND, FIRST + SECOND):
+        with pytest.raises(ValueError, match=r"SyncPipeline\.backfill"):
+            pipe.sync(_events(spark, rows))
+    assert _bucket_files(target) == before
+    assert spark.read.parquet(str(target)).count() == 3
+
+    assert pipe.backfill(_events(spark, FIRST + SECOND)) == 6
+    assert sorted(_bucket_files(target)) == ["wm_day=19723", "wm_day=19724"]
+    assert pipe.sync(_events(spark, SECOND + LATE)) == 1
+    assert pipe.target().count() == 7
 
 
 def test_failed_sync_drops_cached_state(spark, tmp_path, monkeypatch):
