@@ -32,11 +32,10 @@ like the ``localCheckpoint`` they replace.
 from __future__ import annotations
 
 import os
-from pathlib import Path
 
 from pyspark.sql import DataFrame
 
-_SCRATCH = Path(__file__).resolve().parents[1] / ".scratch"
+from .scratch import SCRATCH
 
 
 def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -47,7 +46,7 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
         if sc._jsc.sc().getCheckpointDir().isEmpty():
             sc.setCheckpointDir(
                 os.environ.get(
-                    "SPARK_GRAFT_CKPT_DIR", str(_SCRATCH / "reliable_ckpt")
+                    "SPARK_GRAFT_CKPT_DIR", str(SCRATCH / "reliable_ckpt")
                 )
             )
         return df.checkpoint(eager=eager)

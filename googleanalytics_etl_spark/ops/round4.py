@@ -18,7 +18,6 @@ training-data pipeline at 100 TB) would reach for next:
 
 from __future__ import annotations
 
-import hashlib
 import os
 from pathlib import Path
 
@@ -27,9 +26,7 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import register, sql_dsum, dsum
-from .streaming import stage_atomic
-
-SCRATCH = Path(__file__).resolve().parents[2] / ".scratch"
+from ..scratch import stage
 
 
 # ---------------------------------------------------------------------------
@@ -113,15 +110,6 @@ _ZONE_LO, _ZONE_HI = 200_000.0, 250_000.0
 def _zonemap_stage(spark: SparkSession, sf_dir: str) -> Path:
     """Range-sorted parquet layout of orders, fingerprint-cached (the
     write happens once per fixture; every later call only reads)."""
-    src = Path(sf_dir) / "orders.parquet"
-    st = os.stat(src)
-    # |v2: manifest switched to relative basenames (the staged dir is
-    # built in a temp sibling and atomically renamed into place, so
-    # absolute paths recorded at build time would go stale)
-    fp = hashlib.md5(
-        f"{src.resolve()}|{st.st_size}|{st.st_mtime_ns}|{_ZONE_FILES}|v2".encode()
-    ).hexdigest()[:16]
-    stage = SCRATCH / "zonemap" / f"{Path(sf_dir).name}_{fp}"
 
     def _build(tmp: Path) -> None:
         import json
@@ -159,7 +147,10 @@ def _zonemap_stage(spark: SparkSession, sf_dir: str) -> Path:
             )
         )
 
-    return stage_atomic(stage, _build)
+    # v2: the manifest records relative basenames (the stage is built in
+    # a temp sibling and renamed into place, so absolute paths recorded
+    # at build time would go stale)
+    return stage("zonemap", sf_dir, "orders", _build, _ZONE_FILES, "v2")
 
 
 def zonemap_pruned_scan(

@@ -283,60 +283,50 @@ def _bloom_index_stage(spark: SparkSession, sf_dir: str):
     100 TB, files × 8 KiB of bitmaps is GBs of metadata, so lookups
     scan the manifest DISTRIBUTED (each split reads one page's
     sidecar) and only matching file names reach the driver."""
-    import hashlib
-    import os
-    import shutil
-    from pathlib import Path
-
+    from ..scratch import stage
     from .joins import _bloom_positions
-    from .round4 import SCRATCH
 
-    src = Path(sf_dir) / "events.parquet"
-    st = os.stat(src)
-    # fingerprint covers the indexed column: changing the index scheme
-    # must invalidate the cached manifest, not silently reuse it
-    fp = hashlib.md5(
-        f"{src.resolve()}|{st.st_size}|{st.st_mtime_ns}|{_BIDX_FILES}|{_BIDX_PAGE}|event_id|paged".encode()
-    ).hexdigest()[:16]
-    stage = SCRATCH / "bloomidx" / f"{Path(sf_dir).name}_{fp}"
-    done = stage / "_MANIFEST_DONE"
-    if done.exists():
-        return stage
-    shutil.rmtree(stage, ignore_errors=True)
-    (
-        load(spark, sf_dir, "events")
-        .select("event_id", "user_id", "ts", "event_type", "value")
-        .repartitionByRange(_BIDX_FILES, "ts", "event_id")
-        .sortWithinPartitions("ts", "event_id")
-        .withColumn("pg", F.spark_partition_id() / _BIDX_PAGE)
-        .withColumn("pg", F.col("pg").cast("int"))
-        .write.partitionBy("pg")
-        .parquet(str(stage / "data"))
-    )
-    # one aggregate pass: per (file, word) bit_or of the k probe bits of
-    # every event_id in that file — ≤ files × 1024 rows of metadata,
-    # written straight back out as the paged manifest (no collect)
-    rel = F.regexp_extract(F.input_file_name(), r"(pg=\d+/[^/]+)$", 1)
-    pos = F.explode(F.array(*_bloom_positions(F.col("event_id")))).alias("p")
-    (
-        spark.read.parquet(str(stage / "data"))
-        .select(rel.alias("relpath"), "event_id")
-        .select("relpath", pos)
-        .select(
-            "relpath",
-            (F.col("p") / 64).cast("int").alias("w"),
-            F.expr("shiftleft(CAST(1 AS BIGINT), p % 64)").alias("bit"),
+    def _build(tmp):
+        (
+            load(spark, sf_dir, "events")
+            .select("event_id", "user_id", "ts", "event_type", "value")
+            .repartitionByRange(_BIDX_FILES, "ts", "event_id")
+            .sortWithinPartitions("ts", "event_id")
+            .withColumn("pg", F.spark_partition_id() / _BIDX_PAGE)
+            .withColumn("pg", F.col("pg").cast("int"))
+            .write.partitionBy("pg")
+            .parquet(str(tmp / "data"))
         )
-        .groupBy("relpath", "w")
-        .agg(F.bit_or("bit").alias("word"))
-        .withColumn(
-            "pg", F.regexp_extract("relpath", r"pg=(\d+)", 1).cast("int")
+        # one aggregate pass: per (file, word) bit_or of the k probe bits
+        # of every event_id in that file — ≤ files × 1024 rows of
+        # metadata, written straight back out as the paged manifest (no
+        # collect); relative paths, so the published stage can move
+        rel = F.regexp_extract(F.input_file_name(), r"(pg=\d+/[^/]+)$", 1)
+        pos = F.explode(F.array(*_bloom_positions(F.col("event_id")))).alias("p")
+        (
+            spark.read.parquet(str(tmp / "data"))
+            .select(rel.alias("relpath"), "event_id")
+            .select("relpath", pos)
+            .select(
+                "relpath",
+                (F.col("p") / 64).cast("int").alias("w"),
+                F.expr("shiftleft(CAST(1 AS BIGINT), p % 64)").alias("bit"),
+            )
+            .groupBy("relpath", "w")
+            .agg(F.bit_or("bit").alias("word"))
+            .withColumn(
+                "pg", F.regexp_extract("relpath", r"pg=(\d+)", 1).cast("int")
+            )
+            .write.partitionBy("pg")
+            .parquet(str(tmp / "_blooms"))
         )
-        .write.partitionBy("pg")
-        .parquet(str(stage / "_blooms"))
+
+    # the key covers the indexed column: changing the index scheme must
+    # invalidate the cached manifest, not silently reuse it
+    return stage(
+        "bloomidx", sf_dir, "events", _build,
+        _BIDX_FILES, _BIDX_PAGE, "event_id", "paged",
     )
-    done.touch()
-    return stage
 
 
 def bloom_index_lookup(

@@ -26,8 +26,8 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import register
+from ..scratch import stage
 from .extensions import word_shingles
-from .scans import _SCRATCH, _stage_once
 
 
 # ---------------------------------------------------------------------------
@@ -35,6 +35,23 @@ from .scans import _SCRATCH, _stage_once
 # ---------------------------------------------------------------------------
 
 _EVOLVE_CUTOVER = "1998-01-01"
+
+
+def _evolve_stage(spark: SparkSession, sf_dir: str) -> Path:
+    """orders staged as two generations: ``gen=1`` (before the cutover,
+    without ``o_orderpriority``) and ``gen=2`` (after it, with it)."""
+    cut = F.lit(_EVOLVE_CUTOVER).cast("timestamp_ntz")
+
+    def _write(p: Path) -> None:
+        o = load(spark, sf_dir, "orders")
+        o.where(F.col("o_orderdate") < cut).drop("o_orderpriority").write.mode(
+            "overwrite"
+        ).parquet(str(p / "gen=1"))
+        o.where(F.col("o_orderdate") >= cut).write.mode("overwrite").parquet(
+            str(p / "gen=2")
+        )
+
+    return stage("evolve_orders", sf_dir, "orders", _write, _EVOLVE_CUTOVER)
 
 _EVOLVE_ORACLE = f"""
 SELECT o_orderstatus,
@@ -62,22 +79,9 @@ def q_scan_evolving(spark: SparkSession, sf_dir: str) -> DataFrame:
     same NULL back-fill rule from the unsplit fixture, so the hash
     proves the merged read is lossless (exact-cents revenue).
     """
-    stage = str(_SCRATCH / f"evolve_orders_{Path(sf_dir).name}")
-    cut = F.lit(_EVOLVE_CUTOVER).cast("timestamp_ntz")
-
-    def _write(p: str) -> None:
-        o = load(spark, sf_dir, "orders")
-        o.where(F.col("o_orderdate") < cut).drop("o_orderpriority").write.mode(
-            "overwrite"
-        ).parquet(p + "/gen=1")
-        o.where(F.col("o_orderdate") >= cut).write.mode("overwrite").parquet(
-            p + "/gen=2"
-        )
-        (Path(p) / "_SUCCESS").touch()
-
-    _stage_once(_write, stage)
+    staged = _evolve_stage(spark, sf_dir)
     merged = spark.read.option("mergeSchema", "true").parquet(
-        stage + "/gen=1", stage + "/gen=2"
+        str(staged / "gen=1"), str(staged / "gen=2")
     )
     return merged.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("long").alias("n_orders"),
@@ -116,11 +120,8 @@ def q_scan_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     is why the multimodal family re-chunks binaries into Arrow batches
     immediately after this scan.
     """
-    stage = str(_SCRATCH / f"binfiles_{Path(sf_dir).name}")
 
-    def _write(p: str) -> None:
-        d = Path(p)
-        d.mkdir(parents=True, exist_ok=True)
+    def _write(d: Path) -> None:
         rows = (
             load(spark, sf_dir, "documents")
             .where(F.col("doc_id") < 20)
@@ -129,13 +130,11 @@ def q_scan_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for r in rows:
             (d / f"doc_{r['doc_id']}.txt").write_bytes(r["text"].encode("utf-8"))
-        (d / "_SUCCESS").touch()
 
-    _stage_once(_write, stage)
     return (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.txt")
-        .load(stage)
+        .load(str(stage("binfiles", sf_dir, "documents", _write)))
         .select(
             F.regexp_extract(F.col("path"), r"doc_(\d+)\.txt", 1)
             .cast("long")

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import register
-from .scans import _SCRATCH, _stage_once
+from ..scratch import stage
 from .streaming import _events_stream, _run_to_memory, _stage_events
 
 
@@ -94,6 +94,27 @@ FROM nation
 """
 
 
+def _malformed_stage(spark: SparkSession, sf_dir: str) -> Path:
+    """nation as a CSV feed, ``feed.csv``, with the ``_N_BAD_LINES``
+    malformed lines planted after the clean rows."""
+
+    def _write(d: Path) -> None:
+        rows = (
+            load(spark, sf_dir, "nation")
+            .select("n_nationkey", "n_name", "n_regionkey")
+            .collect()
+        )
+        lines = [
+            f"{r['n_nationkey']},{r['n_name']},{r['n_regionkey']}" for r in rows
+        ]
+        # plant the breakage AFTER the clean rows: wrong arity (short and
+        # long) and a type error — each must land in quarantine, not die
+        lines += ["oops-single-field", "1,two,3,4,5", "notanint,X,alsobad"]
+        (d / "feed.csv").write_text("\n".join(lines) + "\n", encoding="utf-8")
+
+    return stage("malformed_nation", sf_dir, "nation", _write)
+
+
 @register("q_scan_malformed", oracle=_MALFORMED_ORACLE)
 def q_scan_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PERMISSIVE CSV ingest over a feed with broken lines: nation rows
@@ -115,26 +136,6 @@ def q_scan_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     for corrupt-record accounting) so corruption is judged against the
     COMPLETE schema.
     """
-    stage = str(_SCRATCH / f"malformed_nation_{Path(sf_dir).name}")
-
-    def _write(p: str) -> None:
-        d = Path(p)
-        d.mkdir(parents=True, exist_ok=True)
-        rows = (
-            load(spark, sf_dir, "nation")
-            .select("n_nationkey", "n_name", "n_regionkey")
-            .collect()
-        )
-        lines = [
-            f"{r['n_nationkey']},{r['n_name']},{r['n_regionkey']}" for r in rows
-        ]
-        # plant the breakage AFTER the clean rows: wrong arity (short and
-        # long) and a type error — each must land in quarantine, not die
-        lines += ["oops-single-field", "1,two,3,4,5", "notanint,X,alsobad"]
-        (d / "feed.csv").write_text("\n".join(lines) + "\n", encoding="utf-8")
-        (d / "_SUCCESS").touch()
-
-    _stage_once(_write, stage)
     parsed = (
         spark.read.schema(
             "n_nationkey bigint, n_name string, n_regionkey bigint, "
@@ -142,7 +143,7 @@ def q_scan_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .csv(stage + "/feed.csv")
+        .csv(str(_malformed_stage(spark, sf_dir) / "feed.csv"))
         .materialize(eager=True)
     )
     return parsed.agg(

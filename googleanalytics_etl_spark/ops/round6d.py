@@ -17,14 +17,12 @@ directly.
 
 from __future__ import annotations
 
-import hashlib
 import os
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load
 from ..registry import register
 
 # replay window: the first 3 hours of the log arrive AGAIN after
@@ -65,40 +63,23 @@ GROUP BY a.event_type
 
 
 def _stage_with_replay(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the event log as 5 ascending time-span chunks PLUS a 6th
-    replay chunk (first {_LATE_HOURS} h ∪ last {_FRESH_MINUTES} min),
-    pinned-mtime-ordered so the replay always arrives last. Same
-    fingerprint-cached contract as streaming._stage_events."""
-    from .streaming import SCRATCH, stage_atomic, write_chunks_pinned
+    """Stage the event log as streaming._stage_events' ascending
+    time-span chunks PLUS a replay chunk (first {_LATE_HOURS} h ∪ last
+    {_FRESH_MINUTES} min), pinned-mtime-ordered so the replay always
+    arrives last."""
+    from datetime import timedelta
 
-    src = Path(sf_dir) / "events.parquet"
-    st = os.stat(src)
-    fingerprint = hashlib.md5(
-        f"late|{src.resolve()}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:16]
-    stage = SCRATCH / "late_stage" / f"{Path(sf_dir).name}_{fingerprint}"
+    from ..scratch import stage
+    from .streaming import (
+        _EVENT_CHUNKS,
+        _event_chunks,
+        _event_log,
+        write_chunks_pinned,
+    )
 
     def _build(tmp: Path) -> None:
-        e = load(spark, sf_dir, "events").withColumn(
-            "ts", F.col("ts").cast("timestamp")
-        )
-        b = e.select(F.min("ts").alias("lo"), F.max("ts").alias("hi")).first()
-        lo, hi = b["lo"], b["hi"]
-        span = (hi - lo) / 5
-        chunks = []
-        for i in range(5):
-            start = lo + i * span
-            if i == 4:
-                chunks.append(e.where(F.col("ts") >= F.lit(start)))
-            else:
-                end = lo + (i + 1) * span
-                chunks.append(
-                    e.where(
-                        (F.col("ts") >= F.lit(start)) & (F.col("ts") < F.lit(end))
-                    )
-                )
-        from datetime import timedelta
-
+        e = _event_log(spark, sf_dir)
+        chunks, lo, hi = _event_chunks(e)
         late_lo = lo + timedelta(hours=_LATE_HOURS)
         fresh_hi = hi - timedelta(minutes=_FRESH_MINUTES)
         chunks.append(
@@ -108,8 +89,12 @@ def _stage_with_replay(spark: SparkSession, sf_dir: str) -> str:
         )
         write_chunks_pinned(tmp, chunks)
 
-    stage_atomic(stage, _build)
-    return str(stage)
+    return str(
+        stage(
+            "late_stage", sf_dir, "events", _build,
+            _EVENT_CHUNKS, _LATE_HOURS, _FRESH_MINUTES,
+        )
+    )
 
 
 @register("s_late_data_audit", oracle=_LATE_AUDIT_ORACLE)

@@ -695,21 +695,7 @@ def _xsi_stage(spark: SparkSession, sf_dir: str):
     per-day IO bounded by the batch's key spread, never the
     accumulated index size (the hash-bucket layout of upsert_append and
     the CDC state, sources/layout.py)."""
-    import hashlib
-    import os
-    from pathlib import Path as _P
-
-    from .streaming import SCRATCH, stage_atomic
-
-    src = _P(sf_dir) / "embeddings.parquet"
-    st = os.stat(src)
-    fp = hashlib.md5(
-        # |xsi2: signature algorithm version — the integer-quantized dot
-        # changed band keys vs the float-fold build, so a pre-rewrite
-        # staged index must never mix with post-rewrite batch keys
-        f"{src.resolve()}|{st.st_size}|{st.st_mtime_ns}|xsi2".encode()
-    ).hexdigest()[:16]
-    root = SCRATCH / "xsi_index" / f"{_P(sf_dir).name}_{fp}"
+    from ..scratch import stage
 
     def _build(tmp) -> None:
         corpus = load(spark, sf_dir, "embeddings").select(
@@ -729,14 +715,17 @@ def _xsi_stage(spark: SparkSession, sf_dir: str):
             "bucket", bucket_of(_XSI_IDX_BUCKETS, "band", "bkey")
         )
         bucket_writer(idx, _XSI_IDX_BUCKETS).mode("overwrite").parquet(
-            str(_P(tmp) / "band_index")
+            str(tmp / "band_index")
         )
         vec = corpus.withColumn("vbucket", bucket_of(_XSI_VEC_BUCKETS, "vec_id"))
         bucket_writer(vec, _XSI_VEC_BUCKETS, bucket="vbucket").mode(
             "overwrite"
-        ).parquet(str(_P(tmp) / "vec_store"))
+        ).parquet(str(tmp / "vec_store"))
 
-    return stage_atomic(root, _build)
+    # xsi2: signature algorithm version — the integer-quantized dot
+    # changed band keys vs the float-fold build, so a pre-rewrite staged
+    # index must never mix with post-rewrite batch keys
+    return stage("xsi_index", sf_dir, "embeddings", _build, "xsi2")
 
 
 def _xsi_batch(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,11 +14,14 @@ sources`` with their own tests.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import fsum, register, sql_dsum
+from ..scratch import stage
 
 _SCAN_PARQUET_ORACLE = """
 SELECT n_nationkey, n_name, n_regionkey FROM nation
@@ -55,45 +58,35 @@ def q_scan_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- semi-structured ingest, oracled via lossless roundtrip ----------------
 #
 # The fixtures ship only parquet, so the CSV/JSON scan keys stage a copy
-# of a small dimension table in the target format under .scratch/ (tiny,
-# deterministic, overwritten per run) and read it back schema-declared
-# (never inferSchema — at 100 TB inference is a full extra pass). The
-# roundtrip is lossless for these pure int/string tables, so the DuckDB
-# parquet view is a *full hash oracle* for the format readers.
-
-from pathlib import Path  # noqa: E402
-
-_SCRATCH = Path(__file__).resolve().parents[2] / ".scratch"
+# of a small dimension table in the target format (scratch.stage: built
+# once per source file, published atomically) and read it back
+# schema-declared (never inferSchema — at 100 TB inference is a full
+# extra pass). The roundtrip is lossless for these pure int/string
+# tables, so the DuckDB parquet view is a *full hash oracle* for the
+# format readers.
 
 _NATION_SCHEMA = "n_nationkey int, n_name string, n_regionkey int"
 
 _SCAN_CSV_ORACLE = "SELECT n_nationkey, n_name, n_regionkey FROM nation"
 
 
-def _stage_once(write_fn, stage: str) -> None:
-    """Write the staging copy only if absent — repeated builder calls
-    (the driver's count pass + hash pass) must not rewrite the directory
-    under a concurrently scanning reader."""
-    if not (Path(stage) / "_SUCCESS").exists():
-        write_fn(stage)
-
-
 @register("q_scan_csv", oracle=_SCAN_CSV_ORACLE)
 def q_scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-declared CSV ingest (header + quoted strings), staged from
     the parquet fixture and read back losslessly."""
-    stage = str(_SCRATCH / f"csv_nation_{Path(sf_dir).name}")
-    _stage_once(
+    staged = stage(
+        "csv_nation",
+        sf_dir,
+        "nation",
         lambda p: load(spark, sf_dir, "nation")
         .write.mode("overwrite")
         .option("header", "true")
-        .csv(p),
-        stage,
+        .csv(str(p)),
     )
     return (
         spark.read.schema(_NATION_SCHEMA)
         .option("header", "true")
-        .csv(stage)
+        .csv(str(staged))
         .select("n_nationkey", "n_name", "n_regionkey")
     )
 
@@ -107,14 +100,15 @@ SELECT r_regionkey, r_name FROM region
 def q_scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-declared JSON-lines ingest (the API-response flattening
     analogue), staged from the parquet fixture, read back losslessly."""
-    stage = str(_SCRATCH / f"json_region_{Path(sf_dir).name}")
-    _stage_once(
-        lambda p: load(spark, sf_dir, "region").write.mode("overwrite").json(p),
-        stage,
+    staged = stage(
+        "json_region",
+        sf_dir,
+        "region",
+        lambda p: load(spark, sf_dir, "region").write.mode("overwrite").json(str(p)),
     )
     return (
         spark.read.schema("r_regionkey int, r_name string")
-        .json(stage)
+        .json(str(staged))
         .select("r_regionkey", "r_name")
     )
 
@@ -136,17 +130,6 @@ def staged_events_by_date(spark: SparkSession, sf_dir: str) -> DataFrame:
     staging it once per fixture (fingerprint-cached on the source file's
     identity). Shared by the static-pruning (``x_partition_prune``) and
     dynamic-pruning (``x_dpp_join``) operators."""
-    import hashlib
-    import os
-
-    from .streaming import stage_atomic
-
-    src = Path(sf_dir) / "events.parquet"
-    st = os.stat(src)
-    fingerprint = hashlib.md5(
-        f"{src.resolve()}|{st.st_size}|{st.st_mtime_ns}|bydate".encode()
-    ).hexdigest()[:16]
-    stage = _SCRATCH / "part_stage" / f"{Path(sf_dir).name}_{fingerprint}"
 
     def _build(tmp: Path) -> None:
         (
@@ -158,7 +141,7 @@ def staged_events_by_date(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(str(tmp))
         )
 
-    return spark.read.parquet(str(stage_atomic(stage, _build)))
+    return spark.read.parquet(str(stage("part_stage", sf_dir, "events", _build)))
 
 
 @register("x_partition_prune", oracle=_PARTITION_PRUNE_ORACLE)
@@ -345,21 +328,22 @@ def q_scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-declared XML ingest (Spark 4 built-in ``xml`` format),
     staged from the parquet fixture and read back losslessly — completes
     the semi-structured format matrix (CSV, JSON lines, XML)."""
-    stage = str(_SCRATCH / f"xml_nation_{Path(sf_dir).name}")
-    _stage_once(
+    staged = stage(
+        "xml_nation",
+        sf_dir,
+        "nation",
         lambda p: load(spark, sf_dir, "nation")
         .write.format("xml")
         .option("rootTag", "nations")
         .option("rowTag", "nation")
         .mode("overwrite")
-        .save(p),
-        stage,
+        .save(str(p)),
     )
     return (
         spark.read.format("xml")
         .option("rowTag", "nation")
         .schema(_NATION_SCHEMA)
-        .load(stage)
+        .load(str(staged))
         .select("n_nationkey", "n_name", "n_regionkey")
     )
 
@@ -378,15 +362,16 @@ def q_scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     XML, ORC. The oracle reads the same rows from the parquet view —
     a lossless roundtrip through ORC hashes identically.
     """
-    stage = str(_SCRATCH / f"orc_supplier_{Path(sf_dir).name}")
-    _stage_once(
+    staged = stage(
+        "orc_supplier",
+        sf_dir,
+        "supplier",
         lambda p: load(spark, sf_dir, "supplier")
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
         .write.mode("overwrite")
-        .orc(p),
-        stage,
+        .orc(str(p)),
     )
-    return spark.read.orc(stage).select(
+    return spark.read.orc(str(staged)).select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
     )
 
@@ -409,8 +394,10 @@ def q_scan_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     Completes the ingest matrix's unstructured corner: Parquet, ORC,
     CSV, JSON, XML, raw text.
     """
-    stage = str(_SCRATCH / f"text_events_{Path(sf_dir).name}")
-    _stage_once(
+    staged = stage(
+        "text_events",
+        sf_dir,
+        "events",
         lambda p: load(spark, sf_dir, "events")
         .select(
             F.concat_ws(
@@ -422,12 +409,11 @@ def q_scan_text(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("value")
         )
         .write.mode("overwrite")
-        .text(p),
-        stage,
+        .text(str(p)),
     )
     line = F.col("value")
     pat = r"^(\d+)\|(\d+)\|([a-z]+)\|(-?\d+)$"
-    return spark.read.text(stage).select(
+    return spark.read.text(str(staged)).select(
         F.regexp_extract(line, pat, 1).cast("bigint").alias("event_id"),
         F.regexp_extract(line, pat, 2).cast("bigint").alias("user_id"),
         F.regexp_extract(line, pat, 3).alias("event_type"),

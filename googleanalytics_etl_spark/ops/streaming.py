@@ -26,6 +26,7 @@ import os
 import shutil
 import uuid
 from contextlib import contextmanager
+from datetime import datetime
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,10 +34,9 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import fsum, register, sql_dsum
+from ..scratch import SCRATCH, stage
 from ..sources.layout import bucket_dirs, bucket_of, bucket_writer
 from ..sources.sinks import BucketedUpsertSink
-
-SCRATCH = Path(__file__).resolve().parents[2] / ".scratch"
 
 
 _TUMBLING_ORACLE = f"""
@@ -193,92 +193,45 @@ def write_chunks_pinned(chunks_dir: Path, frames: list) -> None:
         seen |= fresh
 
 
-def stage_atomic(target: Path, build) -> Path:
-    """Content-cached staging with an ATOMIC publish. ``build(tmp)``
-    populates a unique temp sibling; the ``_STAGED`` marker is written
-    inside it and the whole directory is ``os.rename``d into place in
-    one step. Concurrent invocations (parallel pytest workers, bench
-    beside tests) may both build, but exactly one rename wins and a
-    reader can never observe a half-staged directory — the earlier
-    check-then-rmtree-then-mkdir recipe raced (mkdir without exist_ok
-    raised FileExistsError; a stream could read a partial stage and
-    fire fewer batches; ADVICE.md round 8). The loser's temp dir is
-    discarded; a stale UNMARKED target (crashed prior run) is swept
-    aside before retrying the rename."""
-    done = target / "_STAGED"
-    if done.exists():
-        return target
-    tmp = target.parent / f".tmp-{uuid.uuid4().hex[:12]}-{target.name}"
-    tmp.mkdir(parents=True)
-    try:
-        build(tmp)
-        (tmp / "_STAGED").touch()
-        for _ in range(2):
-            try:
-                os.rename(tmp, target)
-                return target
-            except OSError:
-                if done.exists():  # another invocation won — use theirs
-                    return target
-                # stale half-staged target from a crashed run: sweep it
-                # aside (rename, not rmtree — atomic w.r.t. readers of
-                # the OLD path is irrelevant since it was never marked)
-                stale = target.parent / f".stale-{uuid.uuid4().hex[:12]}"
-                try:
-                    os.rename(target, stale)
-                    shutil.rmtree(stale, ignore_errors=True)
-                except OSError:
-                    pass
-        if not done.exists():
-            raise RuntimeError(f"could not publish staged dir {target}")
-        return target
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+_EVENT_CHUNKS = 5
 
 
-def _stage_events(spark: SparkSession, sf_dir: str, n_chunks: int = 5) -> str:
-    """Stage the event log as ``n_chunks`` time-ordered parquet files.
+def _event_chunks(e: DataFrame) -> tuple[list[DataFrame], datetime, datetime]:
+    """The event log ``e`` (``ts`` as timestamp) cut into
+    ``_EVENT_CHUNKS`` equal time spans in time order, with the log's
+    min and max ``ts`` (one job). Consecutive chunks never overlap and
+    every chunk's rows are at or after every earlier chunk's."""
+    b = e.select(F.min("ts").alias("lo"), F.max("ts").alias("hi")).first()
+    lo, hi = b["lo"], b["hi"]
+    span = (hi - lo) / _EVENT_CHUNKS
+    starts = [lo + i * span for i in range(_EVENT_CHUNKS)]
+    ts = F.col("ts")
+    chunks = [
+        e.where((ts >= F.lit(a)) & (ts < F.lit(z)))
+        for a, z in zip(starts, starts[1:])
+    ]
+    chunks.append(e.where((ts >= F.lit(starts[-1])) & (ts <= F.lit(hi))))
+    return chunks, lo, hi
+
+
+def _event_log(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load(spark, sf_dir, "events").withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    )
+
+
+def _stage_events(spark: SparkSession, sf_dir: str) -> str:
+    """Stage the event log as ``_EVENT_CHUNKS`` time-ordered parquet files.
 
     Files are written sequentially (ascending mtime) so the file stream
     source processes them in event-time order — micro-batch boundaries
     become deterministic, which makes watermark behavior reproducible.
     """
-    # Cache key covers the resolved source path AND its (size, mtime):
-    # a different dataset with the same basename, or an in-place
-    # regeneration, must invalidate the staged copy.
-    import hashlib
-
-    src = Path(sf_dir) / "events.parquet"
-    st = os.stat(src)
-    fingerprint = hashlib.md5(
-        f"{src.resolve()}|{st.st_size}|{st.st_mtime_ns}|{n_chunks}".encode()
-    ).hexdigest()[:16]
-    stage = SCRATCH / "stream_stage" / f"{Path(sf_dir).name}_{fingerprint}"
 
     def _build(tmp: Path) -> None:
-        e = load(spark, sf_dir, "events").withColumn(
-            "ts", F.col("ts").cast("timestamp")
-        )
-        bounds = e.select(
-            F.min("ts").alias("lo"), F.max("ts").alias("hi")
-        ).first()
-        lo, hi = bounds["lo"], bounds["hi"]
-        span = (hi - lo) / n_chunks
-        chunks = []
-        for i in range(n_chunks):
-            start = lo + i * span
-            end = hi if i == n_chunks - 1 else lo + (i + 1) * span
-            chunks.append(
-                e.where(
-                    (F.col("ts") >= F.lit(start)) & (F.col("ts") <= F.lit(end))
-                    if i == n_chunks - 1
-                    else (F.col("ts") >= F.lit(start))
-                    & (F.col("ts") < F.lit(end))
-                )
-            )
-        write_chunks_pinned(tmp, chunks)
+        write_chunks_pinned(tmp, _event_chunks(_event_log(spark, sf_dir))[0])
 
-    return str(stage_atomic(stage, _build))
+    return str(stage("stream_stage", sf_dir, "events", _build, _EVENT_CHUNKS))
 
 
 def _events_stream(spark: SparkSession, stage: str) -> DataFrame:
@@ -309,15 +262,7 @@ def stage_table(
     measure the loop, not fixture writes. ``tail`` plants exact
     duplicates of ids ``0..tail-1`` under id + 1e6, so they arrive last,
     after their originals are indexed."""
-    import hashlib as _hashlib
-
     n_chunks = 4
-    src = Path(sf_dir) / f"{table}.parquet"
-    st = os.stat(src)
-    fp = _hashlib.md5(
-        f"{src.resolve()}|{st.st_size}|{st.st_mtime_ns}|{n_chunks}".encode()
-    ).hexdigest()[:16]
-    stage = SCRATCH / f"{kind}_stage" / f"{Path(sf_dir).name}_{fp}"
 
     def _build(tmp: Path) -> None:
         d = load(spark, sf_dir, table)
@@ -344,7 +289,7 @@ def stage_table(
             ],
         )
 
-    return str(stage_atomic(stage, _build))
+    return str(stage(f"{kind}_stage", sf_dir, table, _build, id_col, tail, n_chunks))
 
 
 def documents_stream(spark: SparkSession, stage: str) -> DataFrame:

@@ -107,10 +107,14 @@ class BucketedUpsertSink:
     micro-batch; the stateless form re-probes the target every time —
     two Hadoop-FS round-trips (exists? bucketed?) plus a parquet
     schema-inference footer read — even though those facts only change
-    when THIS sink appends. A run-scoped instance probes once, caches
-    the target schema after first contact, and (for callers that do not
+    when THIS sink appends. A run-scoped instance checks existence
+    once, caches the target schema after first contact, and lists the
+    bucket directories once per upsert (metadata only): the anti-join
+    scans only the touched buckets the target holds, and an increment
+    that touches none of them is appended without the anti-join (no
+    broadcast of an empty scan, no count job). For callers that do not
     need the appended-row count, like the streaming loop whose
-    idempotency is already guaranteed by the anti-join) offers
+    idempotency is already guaranteed by the anti-join, it offers
     ``count_appended=False``: the fresh-rows plan is evaluated by the
     write itself, without the count job. With the count, the anti-join
     is still evaluated once: the count job pins its rows (a lazy local
@@ -179,19 +183,23 @@ class BucketedUpsertSink:
         self._state = None
         self._schema = None
 
-    def _probe(self, spark: SparkSession) -> str:
-        if self._state is None:
-            if not path_exists(spark, self.target_path):
-                self._state = "empty"
-            elif bucket_dirs(spark, self.target_path, self.bucket_col):
-                self._state = "bucketed"
-            else:
-                raise ValueError(
-                    f"{self.target_path} exists but has no {self.bucket_col}=K "
-                    "directories; rewrite it with SyncPipeline.backfill "
-                    "(the CLI's backfill command) before syncing into it"
-                )
-        return self._state
+    def _probe(self, spark: SparkSession) -> set[int | None]:
+        """The ids of the target's bucket directories, listed afresh
+        (metadata only; none for an absent target, whose absence is
+        cached)."""
+        if self._state is None and not path_exists(spark, self.target_path):
+            self._state = "empty"
+        if self._state == "empty":
+            return set()
+        dirs = set(bucket_dirs(spark, self.target_path, self.bucket_col))
+        if not dirs:
+            raise ValueError(
+                f"{self.target_path} exists but has no {self.bucket_col}=K "
+                "directories; rewrite it with SyncPipeline.backfill "
+                "(the CLI's backfill command) before syncing into it"
+            )
+        self._state = "bucketed"
+        return dirs
 
     def read_target(self, spark: SparkSession) -> DataFrame:
         """The target as a DataFrame; the first read caches its schema."""
@@ -212,11 +220,11 @@ class BucketedUpsertSink:
     def _bucketed(self, df: DataFrame) -> DataFrame:
         return df.withColumn(self.bucket_col, self._bucket)
 
-    def _touched(self, inc: DataFrame) -> tuple[int, Column, int]:
-        """One job over the pinned ``inc``: its row count, a filter on
-        the bucket column that keeps the buckets its rows fall into, and
-        how many those are (≤ the distinct buckets — bounded metadata,
-        never data-scale). Records ``incoming_max`` in passing."""
+    def _touched(self, inc: DataFrame) -> tuple[int, set[int | None]]:
+        """One job over the pinned ``inc``: its row count and the
+        buckets its rows fall into, None for the null bucket (≤ the
+        distinct buckets — bounded metadata, never data-scale). Records
+        ``incoming_max`` in passing."""
         b = F.col(self.bucket_col)
         wm = self.watermark_col
         n, touched, nulls, self.incoming_max = inc.agg(
@@ -225,8 +233,7 @@ class BucketedUpsertSink:
             F.max(b.isNull()),
             F.max(wm) if wm else F.lit(None),
         ).first()
-        pruned = (b.isin(touched) | b.isNull()) if nulls else b.isin(touched)
-        return n, pruned, len(touched) + bool(nulls)
+        return n, set(touched) | ({None} if nulls else set())
 
     def _write(self, df: DataFrame, n_touched: int) -> None:
         bucket_writer(df, n_touched, bucket=self.bucket_col).mode("append").parquet(
@@ -245,10 +252,10 @@ class BucketedUpsertSink:
         self.invalidate()
         # pinned: counted and written from one evaluation of `incoming`
         with _pinned(self._bucketed(incoming)) as inc:
-            n, _, n_touched = self._touched(inc)
+            n, touched = self._touched(inc)
             if n:
                 # static: the whole old target goes, whatever its layout
-                bucket_writer(inc, n_touched, bucket=self.bucket_col).mode(
+                bucket_writer(inc, len(touched), bucket=self.bucket_col).mode(
                     "overwrite"
                 ).option("partitionOverwriteMode", "static").parquet(
                     self.target_path
@@ -265,10 +272,10 @@ class BucketedUpsertSink:
         appended count is not computed (returns None) and the fresh-row
         plan runs once, inside the write."""
         spark = incoming.sparkSession
-        state = self._probe(spark)
+        existing = self._probe(spark)
         self.incoming_max = None
 
-        if state == "empty" and not count_appended and self.watermark_col is None:
+        if not existing and not count_appended and self.watermark_col is None:
             # written without looking at the rows: no rows leave only
             # _SUCCESS, which is no target, so the target stays "empty"
             self._write(self._bucketed(incoming), self.n_buckets)
@@ -282,24 +289,29 @@ class BucketedUpsertSink:
         # append all observe the SAME rows even if `incoming` is
         # nondeterministic, and the first job computes them in passing
         with _pinned(self._bucketed(incoming)) as inc:
-            n, pruned, n_touched = self._touched(inc)
+            n, touched = self._touched(inc)
             if not n:
                 # no rows → no write, so an absent target stays "empty"
                 return 0 if count_appended else None
-            if state == "empty":
-                self._write(inc, n_touched)
+            existing &= touched
+            if not existing:
+                # every copy of a key is in one bucket, so no row of a
+                # bucket the target lacks can be loaded: no anti-join
+                self._write(inc, len(touched))
                 self._state = "bucketed"
                 return n if count_appended else None
 
+            b = F.col(self.bucket_col)
+            held = b.isin([k for k in existing if k is not None])
             loaded = (
                 self.read_target(spark)
-                .where(pruned)  # dir-pruned scan
+                .where((held | b.isNull()) if None in existing else held)  # dir-pruned
                 .select(self.key)
             )
             anti = inc.join(loaded, self.key, "left_anti")
             if not count_appended:
                 # single evaluation of the anti-join, inside the write
-                self._write(anti, n_touched)
+                self._write(anti, len(touched))
                 return None
             # the count evaluates the anti-join once against the target
             # as it was; the write reads those rows back. (A persisted
@@ -308,7 +320,7 @@ class BucketedUpsertSink:
             with _pinned(anti) as fresh:
                 n = fresh.count()
                 if n:
-                    self._write(fresh, n_touched)
+                    self._write(fresh, len(touched))
             return n
 
 

@@ -16,12 +16,12 @@ from conftest import SF_SMALL
 from pyspark.sql import functions as F
 
 from googleanalytics_etl_spark.ops.streaming import (
-    SCRATCH,
     _events_stream,
     _run_to_memory,
     _stage_events,
 )
 from googleanalytics_etl_spark.registry import queries
+from googleanalytics_etl_spark.scratch import SCRATCH
 
 _ROCKS = (
     "org.apache.spark.sql.execution.streaming.state."

@@ -135,7 +135,7 @@ def test_bloom_index_prunes_files_and_stays_sound(spark):
     # manifest is written once and reused (fingerprint cache), PAGED:
     # one sidecar directory per data page, never a driver-side blob
     stage = _bloom_index_stage(spark, SF_SMALL)
-    assert (stage / "_MANIFEST_DONE").exists()
+    assert (stage / "_STAGED").exists()
     pages = sorted(p.name for p in (stage / "_blooms").glob("pg=*"))
     assert len(pages) >= 4
     assert pages == sorted(p.name for p in (stage / "data").glob("pg=*"))

@@ -27,12 +27,10 @@ def test_scan_evolving_nullfills_missing_column(spark):
 
 
 def test_scan_evolving_merged_schema_has_all_columns(spark):
-    from googleanalytics_etl_spark.ops.round5e import _EVOLVE_CUTOVER, _SCRATCH
+    from googleanalytics_etl_spark.ops.round5e import _EVOLVE_CUTOVER, _evolve_stage
 
-    from pathlib import Path
-
-    stage = str(_SCRATCH / f"evolve_orders_{Path(SF_SMALL).name}")
     queries()["q_scan_evolving"](spark, SF_SMALL).collect()  # ensure staged
+    stage = str(_evolve_stage(spark, SF_SMALL))
     merged = spark.read.option("mergeSchema", "true").parquet(
         stage + "/gen=1", stage + "/gen=2"
     )

@@ -59,12 +59,10 @@ def test_scan_malformed_accounts_for_every_line(spark):
 
 def test_scan_malformed_quarantine_preserves_raw_lines(spark):
     # the quarantined rows carry the ORIGINAL text (re-parseable offline)
-    from pathlib import Path
+    from googleanalytics_etl_spark.ops.round5f import _malformed_stage
 
-    from googleanalytics_etl_spark.ops.round5f import _SCRATCH
-
-    stage = str(_SCRATCH / f"malformed_nation_{Path(SF_SMALL).name}")
     queries()["q_scan_malformed"](spark, SF_SMALL).collect()  # ensure staged
+    stage = str(_malformed_stage(spark, SF_SMALL))
     parsed = (
         spark.read.schema(
             "n_nationkey bigint, n_name string, n_regionkey bigint, "

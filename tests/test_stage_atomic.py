@@ -8,7 +8,7 @@ from pathlib import Path
 
 import pytest
 
-from googleanalytics_etl_spark.ops.streaming import stage_atomic
+from googleanalytics_etl_spark.scratch import stage_atomic
 
 
 def _target(tmp_path: Path) -> Path:

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import pathlib
 
+from datetime import date
+
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
@@ -22,6 +24,12 @@ EVENT_COLS = ["event_id", "ts", "user_id", "event_type", "value", "props"]
 # watermark (1), the target's key broadcast (1), the anti-join count
 # (1), and the bucket write's shuffle and file write (2).
 JOBS_PER_SYNC = 5
+
+# Spark jobs in one sync whose increment touches only days the target
+# has no directory for: touched buckets and watermark (1) and the bucket
+# write (2). No row of a new day can be loaded, so the sink plans no
+# anti-join: no broadcast of an empty target scan, no count job.
+JOBS_NEW_DAYS = 3
 
 
 def _log():
@@ -158,3 +166,40 @@ def test_syncs_leave_no_pinned_blocks(spark, tmp_path):
         sf = _write_increment(log.slice(lo, 200), tmp_path / f"inc{i}")
         pipe.sync(read_paged(spark, sf))
         assert pinned() == start, f"sync {i} left persisted or checkpointed RDDs"
+
+
+def test_sync_of_new_days_only_skips_the_anti_join(spark, tmp_path):
+    log = _log()
+    day = pc.cast(log["ts"], "date32")
+    parts = [
+        log.filter(pc.less(day, date(2024, 1, 11))),
+        log.filter(pc.and_(pc.greater_equal(day, date(2024, 1, 11)), pc.less(day, date(2024, 1, 21)))),
+        log.filter(pc.greater_equal(day, date(2024, 1, 22))),
+    ]
+    incs = [_write_increment(p, tmp_path / f"inc{i}") for i, p in enumerate(parts)]
+    target = tmp_path / "target"
+    pipe = SyncPipeline(spark, EXAMPLE_CONFIG, str(target))
+    pipe.sync(read_paged(spark, incs[0]))
+    pipe.sync(read_paged(spark, incs[1]))
+    before = _files(target)
+    sc = spark.sparkContext
+    group = "sync-new-days"
+    sc.setJobGroup(group, "one sync of new days", False)
+    try:
+        assert pipe.sync(read_paged(spark, incs[2])) == parts[2].num_rows
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sorted(sc.statusTracker().getJobIdsForGroup(group))
+    assert len(jobs) <= JOBS_NEW_DAYS, (
+        f"a sync of new days only ran {len(jobs)} Spark jobs; at most "
+        f"{JOBS_NEW_DAYS} expected — the anti-join against absent days came back"
+    )
+    # every new day gained one file, and the target holds every row once
+    new_days = len(set(pc.cast(parts[2]["ts"], "date32").to_pylist()))
+    assert len(_files(target) - before) == new_days
+    got = sorted(tuple(r) for r in pipe.target().select("client_id", "hit_ts").collect())
+    want = sorted(
+        (u, ts) for p in parts
+        for u, ts in zip(p["user_id"].to_pylist(), p["ts"].to_pylist())
+    )
+    assert got == want
