@@ -1,7 +1,8 @@
 """Round-5 pre-work: operators built late in round 4, registered AFTER
 the 50-key driver window (their driver CORRECTNESS rows land when the
 round-5 window rotates them forward; until then the evidence is the
-local differential harness + verify_driver/verify_strict emulation).
+local differential harness + ``tools/verify.py`` emulation, with and
+without ``--strict``).
 
 - ``q_join_asof_tolerance`` — as-of join with a staleness bound
   (pandas ``merge_asof(tolerance=...)`` parity): a match older than

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import fsum, register, sql_dsum
-from ..scratch import SCRATCH, stage
+from ..scratch import SCRATCH, SWEEP_GRACE_S, stage
 from ..sources.layout import bucket_dirs, bucket_of, bucket_writer
 from ..sources.sinks import BucketedUpsertSink
 
@@ -697,9 +697,6 @@ WHERE e.event_type <> 'error'
 _CDC_BUCKETS = 8
 
 
-_SWEEP_GRACE_S = 1800
-
-
 def _sweep_runs(kind: str) -> Path:
     """Fresh uuid run dir under ``SCRATCH/kind``; superseded prior runs
     are deleted so scratch does not grow without bound across
@@ -713,7 +710,7 @@ def _sweep_runs(kind: str) -> Path:
 
     base = SCRATCH / kind
     if base.exists():
-        cutoff = _time.time() - _SWEEP_GRACE_S
+        cutoff = _time.time() - SWEEP_GRACE_S
         for old in base.iterdir():
             try:
                 if old.stat().st_mtime < cutoff:

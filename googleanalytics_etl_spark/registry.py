@@ -12,6 +12,13 @@ Every operator from SURVEY.md §2 registers here exactly once, pairing
 registry, and the pytest differential harness iterates it, so local tests
 and the driver's correctness gate exercise the identical surface.
 
+The grading driver checks the first 50 ``queries()`` keys per round. The
+order is computed once per process from the evidence ledger
+(:func:`.ledger.gather`), never from import order (:func:`driver_order`):
+keys rewritten since their last official row, then keys never checked
+or failing at last contact, then the rest, oldest evidence first; ties
+by key name.
+
 Cross-engine determinism conventions (SURVEY.md §7 "hard parts"):
 
 - **Doubles are never summed as doubles.** Float addition is not
@@ -34,11 +41,14 @@ Cross-engine determinism conventions (SURVEY.md §7 "hard parts"):
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import functools
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from . import ledger
 
 Builder = Callable[[SparkSession, str], DataFrame]
 
@@ -75,153 +85,58 @@ def _populate() -> None:
     from . import ops as _ops  # noqa: F401  (populates REGISTRY on import)
 
 
-# Explicit key order handed to the driver. The grading driver evaluates the
-# first 50 ``queries()`` keys per round, so each round rotates the keys that
-# most need fresh cross-engine evidence to the front; keys not listed keep
-# their registration (import) order after these. Round-4 window: the 12
-# round-3 additions that have never been inside a driver window, plus
-# ``x_sim_knn_ivf``/``x_sim_knn_lsh`` whose only driver contact (r1) predates
-# their full hash oracles, then every key NEW this round, then re-confirmation
-# slots for the keys whose latest driver evidence is oldest (round 1).
-# Keys green in CORRECTNESS_r02/r03 sit after slot 50.
-_DRIVER_ORDER: list[str] = [
-    # --- never driver-windowed (round-3 additions) -----------------------
-    "q_global_rank", "x_dedup_editdist", "x_embed_centroids",
-    "x_dedup_cc_star", "s_stream_outer", "q_rolling_wau", "x_profile",
-    "x_zorder", "q_join_band_broadcast", "q_cogroup_pandas",
-    "q_scan_xml", "q_recursive_cte",
-    # --- driver evidence stale: last seen r1 as no_oracle, full hash
-    #     oracles added round 2 but never driver-executed ------------------
-    "x_sim_knn_ivf", "x_sim_knn_lsh",
-    # --- NEW in round 4 (inserted here as they are built) ----------------
-    "x_sketch_hll_wau", "x_sketch_kll_quantiles", "x_sketch_theta_overlap",
-    "q_join_asof_nearest", "x_zonemap_skip", "x_ngram_counts",
-    "q_interpolate", "x_knn_join_blocked",
-    "q_lateral_topk", "x_cooccur_pmi", "x_bm25", "x_embed_quantize",
-    "q_join_full", "q_agg_boolean", "q_window_misc", "q_regression",
-    "x_repetition_score", "x_feature_hash",
-    "x_graph_triangles", "q_moving_median", "x_anomaly_mad",
-    "x_kmeans", "q_cohort_ltv", "x_bloom_index",
-    "x_ann_recall", "x_span_dup_profile", "q_multi_pivot",
-    "x_gram_matrix", "q_percentile_disc", "q_scan_orc", "x_langid_confusion",
-    "x_dedup_eval", "q_explode_outer", "q_scan_text",
-    # --- re-confirmation: oldest driver evidence (round 1) ---------------
-    "q_sessionize", "q_flagship", "q_flagship2",
-    "q_funnel", "q_retention", "q_anomaly_zscore",
-    "q_fn_string", "q_fn_date", "q_fn_math", "q_fn_hash", "q_fn_json",
-    "q_fn_array", "q_fn_map", "q_fn_variant", "q_fn_url", "q_fn_bitwise",
-    "q_join_inner", "q_join_left", "q_join_broadcast", "q_join_semi",
-    "q_groupby_agg", "q_count_distinct", "q_distinct_rows",
-    "q_rollup", "q_cube", "q_grouping_sets", "q_pivot",
-    "q_agg_filtered", "q_agg_stats", "q_agg_minmax_by",
-    "x_dedup_exact", "x_sim_knn", "x_text_stats", "x_lang_route",
-    "x_doc_join", "x_ngram_jaccard", "x_embed_cosine_dedup",
-    "x_tokenize", "x_lang_id", "x_quality_score", "x_fingerprint",
-    "x_validate", "x_cdc_chunks",
-    # --- slot 51+: built late round 4, FIRST IN LINE for the round-5
-    #     window rotation (strict-verifier evidence only until then;
-    #     next session: move this whole block to the top so the driver
-    #     issues their first CORRECTNESS rows, and retire the round-4
-    #     window keys behind slot 50 once their r04 rows land) --------
-    "q_join_asof_tolerance", "x_top_movers", "x_ngram_novelty",
-    "q_join_null_safe", "q_time_weighted_avg",
-    "x_mixture_sample", "x_token_entropy", "x_winsorize",
-    "x_neighbor_jaccard", "x_bpe_merge", "x_semdedup",
-    "q_interval_merge", "x_containment", "x_approx_topk",
-    "x_bigram_logprob", "x_diverse_sample", "x_dp_groupby",
-    "q_scan_evolving", "q_scan_binaryfile", "x_dedup_incremental",
-    "s_topk_complete", "q_scan_malformed", "x_curation_e2e",
-    "x_bigram_heldout", "x_shard_balance",
-    "x_weighted_sample", "q_pivot_dynamic",
-    "x_equidepth_hist", "x_bpe_apply", "x_dpp_join", "x_hilbert",
-    "x_rrf_fusion", "x_hard_negatives", "q_arrow_map",
-    "q_join_asof_forward", "x_filter_attribution", "x_graph_degree_dist",
-    "x_dedup_normalized", "x_pack_audit",
-    "q_union_evolving", "x_source_overlap", "s_session_dynamic",
-    "q_fn_timezone", "x_vocab_coverage", "x_train_val_test", "x_rfm_features",
-    "x_psi_drift", "x_user_coherent_sample",
-    "x_dedup_threshold_curve", "x_time_decay",
-    # --- keys hash-proven in CORRECTNESS_r02/r03 -------------------------
-    "q_cast_types", "q_subquery_correlated", "q_subquery_exists",
-    "x_multimodal", "x_media_frames", "x_dedup_clusters",
-    "q_attribution", "q_percentiles", "x_tfidf",
-    "q_bounce_rate", "q_entry_exit", "q_path_transitions", "q_gap_fill",
-    "q_histogram", "q_correlation", "q_incremental_agg", "x_decontaminate",
-    "q_tpch_q1", "q_tpch_q2", "q_tpch_q3", "q_tpch_q4", "q_tpch_q5",
-    "q_tpch_q6", "q_tpch_q7", "q_tpch_q8", "q_tpch_q9", "q_tpch_q10",
-    "q_tpch_q11", "q_tpch_q12", "q_tpch_q13", "q_tpch_q14", "q_tpch_q15",
-    "q_tpch_q16", "q_tpch_q17", "q_tpch_q18", "q_tpch_q19", "q_tpch_q20",
-    "q_tpch_q21", "q_tpch_q22",
-    "s_enrich", "s_stream_join",
-    "q_ewma", "x_pagerank", "x_scd2", "x_countmin",
-    "q_skew_distinct", "q_skew_join",
-    "s_cdc_apply", "x_partition_prune", "x_bloom_semi",
-    "q_scan_parquet", "q_scan_pruned", "q_scan_csv", "q_scan_json",
-    "q_project_rename", "q_filter_pred",
-    "q_derive_expr", "q_case_when", "q_null_handling",
-    "q_join_anti", "q_join_range", "q_join_asof",
-    "q_approx_distinct", "q_collect_sorted",
-    "q_window_rank", "q_window_lag", "q_running_sum",
-    "q_window_range_frame", "q_first_last_touch", "q_ntile", "q_percent_rank",
-    "q_orderby_limit", "q_topk_per_group", "q_union_all",
-    "q_except", "q_intersect", "q_unpivot", "q_date_spine",
-    "s_tumbling", "s_sliding", "s_session", "s_dedup",
-    "s_watermark", "s_incremental_sync", "s_stateful_user",
-    "q_udf_scalar", "q_udf_pandas", "q_udaf_pandas",
-    "q_udtf_explode", "q_udtf_pairs",
-    "x_sample_hash", "x_stratified_sample", "x_chunk_docs",
-    "x_pack_sequences", "x_pii_scrub", "x_corpus_shard", "x_corpus_prep",
-    "x_dedup_near", "x_dedup_simhash", "x_dedup_near_survivors",
-]
+# Keys rewritten after their last official correctness row: round 12's
+# and round 13's rewrites, and the keys whose MinHash/LSH plans were
+# rebuilt after round 13 (every key reaching ``_minhash_parts`` or
+# ``_minhash_pairs``). Each leads the driver order until a round newer
+# than ``_REWRITTEN_THROUGH`` checks it again.
+_REWRITTEN = frozenset({
+    # round 12
+    "x_mmr_rerank", "x_power_iteration", "x_clustering_coef",
+    "q_join_range_banded", "s_error_budget",
+    # round 13
+    "x_dedup_eval", "x_containment", "x_graph_2hop", "x_weighted_jaccard",
+    "x_graph_triangles", "x_hits", "s_semdedup", "s_dedup_near",
+    "s_winnow_matches",
+    # MinHash/LSH rebuild
+    "x_lsh_tuning", "x_dedup_near", "x_dedup_near_survivors",
+    "x_dedup_clusters", "x_dedup_cc_star", "x_dedup_threshold_curve",
+    "x_split_contamination", "x_cross_source_dups", "x_minhash_accuracy",
+    "x_cc_sizes",
+})
+_REWRITTEN_THROUGH = 13
 
 
-# Round 12 head start (pre-staged per the standing rotation discipline):
-# the four round-11 additions lead (registered after the round-11
-# window froze — first official driver rows), then the oldest-evidence
-# refresh: the three remaining round-3 keys and the round-4-era tail in
-# alphabetical order (the overflow, x_sketch_kll_quantiles onward,
-# spills to round 13). This is the live window: ``_WINDOW_OVERRIDE``
-# points here.
-_ROUND12_HEAD: list[str] = [
-    "x_dup_rate_by_source", "x_decon_report", "s_exact_substring_durable",
-    "s_decon_gate",
-    "x_partition_prune", "x_scd2", "x_tfidf",
-    "q_agg_boolean", "q_cogroup_pandas", "q_cohort_ltv",
-    "q_explode_outer", "q_flagship", "q_global_rank",
-    "q_interpolate", "q_join_asof_nearest", "q_join_band_broadcast",
-    "q_join_full", "q_lateral_topk", "q_moving_median",
-    "q_multi_pivot", "q_percentile_disc", "q_recursive_cte",
-    "q_regression", "q_rolling_wau", "q_scan_orc",
-    "q_scan_text", "q_scan_xml", "q_sessionize",
-    "q_window_misc", "s_stream_outer", "x_ann_recall",
-    "x_anomaly_mad", "x_bloom_index", "x_bm25",
-    "x_cooccur_pmi", "x_dedup_cc_star", "x_dedup_editdist",
-    "x_dedup_eval", "x_embed_centroids", "x_embed_quantize",
-    "x_feature_hash", "x_gram_matrix", "x_graph_triangles",
-    "x_kmeans", "x_langid_confusion", "x_ngram_counts",
-    "x_profile", "x_repetition_score", "x_sim_knn_ivf",
-    "x_sim_knn_lsh",
-]
+def driver_order(keys: Iterable[str], latest: dict[str, tuple[int, str]]) -> list[str]:
+    """``keys`` in driver order, given the ledger's newest ``(round,
+    status)`` per key (:func:`.ledger.gather`): rewritten keys not yet
+    re-checked, then keys never checked or failing at last contact, then
+    every other key, oldest evidence first; ties by key name."""
 
-_WINDOW_OVERRIDE: list[str] | None = _ROUND12_HEAD
+    def rank(key: str) -> tuple[int, int, str]:
+        rec = latest.get(key)
+        if key in _REWRITTEN and (rec is None or rec[0] <= _REWRITTEN_THROUGH):
+            return 0, 0, key
+        if rec is None or rec[1] == "fail":
+            return 1, 0, key
+        return 2, rec[0], key
+
+    return sorted(keys, key=rank)
 
 
-def _ordered() -> list[str]:
-    listed = [k for k in _DRIVER_ORDER if k in REGISTRY]
-    if _WINDOW_OVERRIDE is not None:
-        head = [k for k in _WINDOW_OVERRIDE if k in REGISTRY]
-        listed = head + [k for k in listed if k not in set(head)]
-    rest = [k for k in REGISTRY if k not in set(listed)]
-    return listed + rest
+@functools.cache
+def _ordered() -> tuple[str, ...]:
+    """The driver order, computed once per process (perfbench calls
+    ``queries()`` per operation)."""
+    _populate()
+    return tuple(driver_order(REGISTRY, ledger.gather()[0]))
 
 
 def queries() -> dict[str, Builder]:
-    _populate()
     return {k: REGISTRY[k].builder for k in _ordered()}
 
 
 def oracle_sql() -> dict[str, str]:
-    _populate()
     return {
         k: REGISTRY[k].oracle for k in _ordered() if REGISTRY[k].oracle is not None
     }

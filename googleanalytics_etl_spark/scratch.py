@@ -4,7 +4,9 @@ A stage is a derived copy of a fixture table under ``.scratch/`` (a
 format copy for a reader, a file stream's chunks, a prebuilt index).
 :func:`stage` keys it on the source file's identity and every build
 parameter and publishes it atomically with :func:`stage_atomic`, at
-``SCRATCH/<kind>/<sf name>_<fp>``. The stream stages keep their
+``SCRATCH/<kind>/<sf name>_<fp>``, and removes the superseded siblings
+(same kind and sf name, another fingerprint) unused for
+``SWEEP_GRACE_S``. The stream stages keep their
 ``*_stage`` kinds and ``<input dir>_<fp>`` names because perfbench
 clears ``.scratch/*_stage/<input dir>_*`` before every pass, so
 curation's ``s_winnow_matches`` rebuilds ``winnow_stage`` inside its
@@ -16,11 +18,16 @@ from __future__ import annotations
 import hashlib
 import os
 import shutil
+import time
 import uuid
 from pathlib import Path
 from typing import Callable
 
 SCRATCH = Path(__file__).resolve().parents[1] / ".scratch"
+
+# How long a scratch entry is spared after its last use: a concurrent
+# process (a plan audit beside a verifier) may still be reading it.
+SWEEP_GRACE_S = 1800
 
 
 def stage_atomic(target: Path, build: Callable[[Path], None]) -> Path:
@@ -77,10 +84,22 @@ def stage(
     ``sf_dir``'s ``table`` by ``build(tmp)``, built and published once.
     ``fp`` fingerprints the table's parquet file (resolved path, size,
     mtime_ns) and ``key``, which must name every parameter ``build``
-    depends on."""
+    depends on. A sibling of another fingerprint, unused for
+    ``SWEEP_GRACE_S``, is superseded and removed."""
     src = Path(sf_dir) / f"{table}.parquet"
     st = src.stat()
     fp = hashlib.md5(
         "|".join(map(str, (src.resolve(), st.st_size, st.st_mtime_ns, *key))).encode()
     ).hexdigest()[:16]
-    return stage_atomic(SCRATCH / kind / f"{Path(sf_dir).name}_{fp}", build)
+    prefix = f"{Path(sf_dir).name}_"
+    target = stage_atomic(SCRATCH / kind / f"{prefix}{fp}", build)
+    os.utime(target)  # its mtime is its last use
+    cutoff = time.time() - SWEEP_GRACE_S
+    for old in target.parent.glob(f"{prefix}*"):  # equal length: not a longer sf name
+        if old != target and len(old.name) == len(target.name):
+            try:
+                if old.stat().st_mtime < cutoff:
+                    shutil.rmtree(old, ignore_errors=True)
+            except OSError:
+                pass
+    return target

@@ -1,8 +1,8 @@
 """Shared fixtures: one SparkSession and one DuckDB connection per run.
 
 The DuckDB connection pre-registers every fixture table as a view of the
-same parquet file, replicating the driver's oracle environment
-(__spark_entry__.py docstring; SURVEY.md §5).
+same parquet file (``googleanalytics_etl_spark.oracle.register_views``),
+replicating the driver's oracle environment.
 """
 
 from __future__ import annotations
@@ -15,7 +15,8 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from googleanalytics_etl_spark import TABLES, get_spark
+from googleanalytics_etl_spark import get_spark
+from googleanalytics_etl_spark.oracle import register_views
 
 SF_SMALL = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 SF_MED = "/root/testdata/sf0.01"
@@ -32,14 +33,6 @@ def duck():
     con = duckdb.connect()
     yield con
     con.close()
-
-
-def register_views(con: duckdb.DuckDBPyConnection, sf_dir: str) -> None:
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
 
 
 @pytest.fixture(scope="session")

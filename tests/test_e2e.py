@@ -3,9 +3,6 @@ derived report tables — the full EP1'+EP3' path through one pipeline."""
 
 from __future__ import annotations
 
-import shutil
-from pathlib import Path
-
 import pytest
 from conftest import SF_SMALL
 
@@ -14,17 +11,13 @@ from googleanalytics_etl_spark.io import load
 from googleanalytics_etl_spark.reports import materialize_reports
 from googleanalytics_etl_spark.sources import read_paged
 
-SCRATCH = Path(__file__).resolve().parents[1] / ".scratch" / "test_e2e"
+
+@pytest.fixture(scope="module")
+def scratch_dir(tmp_path_factory):
+    return tmp_path_factory.mktemp("test_e2e")
 
 
-@pytest.fixture(autouse=True, scope="module")
-def _clean():
-    shutil.rmtree(SCRATCH, ignore_errors=True)
-    SCRATCH.mkdir(parents=True, exist_ok=True)
-    yield
-
-
-def test_incremental_sync_waves_with_duckdb_oracle(spark):
+def test_incremental_sync_waves_with_duckdb_oracle(spark, scratch_dir):
     """The reference's ACTUAL main loop, end-to-end and incremental:
     paged extract → typed flatten (config project) → HWM-gated tail →
     anti-join → bucketed upsert append, run as two historical waves plus
@@ -36,7 +29,7 @@ def test_incremental_sync_waves_with_duckdb_oracle(spark):
 
     from googleanalytics_etl_spark.reports import build_daily_metrics
 
-    target = str(SCRATCH / "hits_waves")
+    target = str(scratch_dir / "hits_waves")
     pipe = SyncPipeline(spark, EXAMPLE_CONFIG, target)
     src = read_paged(spark, SF_SMALL, chunks=4)
     total = src.count()
@@ -87,12 +80,12 @@ def test_incremental_sync_waves_with_duckdb_oracle(spark):
     assert got == want
 
 
-def test_full_reference_workflow(spark):
+def test_full_reference_workflow(spark, scratch_dir):
     from pyspark.sql import functions as F
 
     # EP1': extract through the paged API source, sync incrementally
     extracted = read_paged(spark, SF_SMALL, chunks=4)
-    pipe = SyncPipeline(spark, EXAMPLE_CONFIG, str(SCRATCH / "hits"))
+    pipe = SyncPipeline(spark, EXAMPLE_CONFIG, str(scratch_dir / "hits"))
     n = pipe.sync(extracted)
     assert n == extracted.count()
     assert pipe.sync(extracted) == 0  # idempotent re-extract
@@ -105,7 +98,7 @@ def test_full_reference_workflow(spark):
         F.col("hit_type").alias("event_type"),
         F.col("metric_value").alias("value"),
     )
-    paths = materialize_reports(spark, target, str(SCRATCH / "reports"))
+    paths = materialize_reports(spark, target, str(scratch_dir / "reports"))
 
     sessions = spark.read.parquet(paths["sessions"])
     events = load(spark, SF_SMALL, "events")

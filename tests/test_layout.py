@@ -8,8 +8,6 @@ from __future__ import annotations
 
 import glob
 import json
-import shutil
-from pathlib import Path
 
 import pyarrow.parquet as pq
 import pytest
@@ -22,14 +20,10 @@ from googleanalytics_etl_spark.sources import (
     read_json_tolerant,
 )
 
-SCRATCH = Path(__file__).resolve().parents[1] / ".scratch" / "test_layout"
 
-
-@pytest.fixture(autouse=True, scope="module")
-def _clean_scratch():
-    shutil.rmtree(SCRATCH, ignore_errors=True)
-    SCRATCH.mkdir(parents=True, exist_ok=True)
-    yield
+@pytest.fixture(scope="module")
+def scratch_dir(tmp_path_factory):
+    return tmp_path_factory.mktemp("test_layout")
 
 
 def _file_key_spans(path: str, col: str) -> list[tuple[int, int]]:
@@ -49,13 +43,13 @@ def _file_key_spans(path: str, col: str) -> list[tuple[int, int]]:
     return spans
 
 
-def test_cluster_write_separates_key_ranges(spark):
+def test_cluster_write_separates_key_ranges(spark, scratch_dir):
     """Range-clustered files must cover pairwise-disjoint user_id spans:
     a selective predicate can then skip every file but one on metadata
     alone. An unclustered write of the same data shows near-total span
     overlap — the contrast IS the point of the layout."""
     e = load(spark, SF_SMALL, "events")
-    tgt = str(SCRATCH / "clustered")
+    tgt = str(scratch_dir / "clustered")
     cluster_write(e, tgt, ["user_id"], n_files=4)
 
     spans = _file_key_spans(tgt, "user_id")
@@ -65,7 +59,7 @@ def test_cluster_write_separates_key_ranges(spark):
         assert hi_a <= lo_b, f"overlapping file spans {spans}"
 
     # control: default layout (hash of input splits) does NOT separate
-    plain = str(SCRATCH / "plain")
+    plain = str(scratch_dir / "plain")
     e.repartition(4).write.mode("overwrite").parquet(plain)
     pspans = _file_key_spans(plain, "user_id")
     pspans.sort()
@@ -78,10 +72,10 @@ def test_cluster_write_separates_key_ranges(spark):
     assert spark.read.parquet(tgt).count() == e.count()
 
 
-def test_cluster_write_row_groups_sorted_within_file(spark):
+def test_cluster_write_row_groups_sorted_within_file(spark, scratch_dir):
     """sortWithinPartitions must hold inside files too: successive row
     groups of one file carry non-overlapping, ascending key spans."""
-    tgt = str(SCRATCH / "clustered")  # written by the previous test
+    tgt = str(scratch_dir / "clustered")  # written by the previous test
     for f in sorted(glob.glob(f"{tgt}/part-*.parquet")):
         md = pq.ParquetFile(f).metadata
         idx = md.schema.to_arrow_schema().get_field_index("user_id")
@@ -93,14 +87,14 @@ def test_cluster_write_row_groups_sorted_within_file(spark):
             prev_max = st.max
 
 
-def test_compact_parquet_resizes(spark):
+def test_compact_parquet_resizes(spark, scratch_dir):
     """64 fragment files → size-targeted few files, rows preserved."""
     e = load(spark, SF_SMALL, "events")
-    frag = str(SCRATCH / "fragmented")
+    frag = str(scratch_dir / "fragmented")
     e.repartition(64).write.mode("overwrite").parquet(frag)
     assert len(glob.glob(f"{frag}/part-*.parquet")) == 64
 
-    dst = str(SCRATCH / "compacted")
+    dst = str(scratch_dir / "compacted")
     n = compact_parquet(spark, frag, dst, target_mb=1)
     files = glob.glob(f"{dst}/part-*.parquet")
     assert len(files) == n
@@ -108,10 +102,10 @@ def test_compact_parquet_resizes(spark):
     assert spark.read.parquet(dst).count() == e.count()
 
 
-def test_read_json_tolerant_quarantines(spark):
+def test_read_json_tolerant_quarantines(spark, scratch_dir):
     """Malformed lines land in quarantine with their raw text; good rows
     parse completely; nothing is silently dropped."""
-    feed = SCRATCH / "feed.jsonl"
+    feed = scratch_dir / "feed.jsonl"
     good = [
         {"event_id": i, "ts": "2024-01-01T00:00:00", "user_id": i,
          "event_type": "view", "value": 1.5, "props": "{}"}

@@ -10,40 +10,12 @@ sees it.
 
 from __future__ import annotations
 
-import math
-from datetime import date, datetime
-from decimal import Decimal
-
 import pytest
 
+from googleanalytics_etl_spark.oracle import norm_rows
 from googleanalytics_etl_spark.registry import REGISTRY, oracle_sql, queries
 
 from conftest import SF_SMALL
-
-
-def _norm_cell(v):
-    if v is None:
-        return None
-    if isinstance(v, Decimal):
-        return float(v)
-    if isinstance(v, datetime):
-        return v.replace(tzinfo=None).isoformat(timespec="microseconds")
-    if isinstance(v, date):
-        return v.isoformat()
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return v
-    if isinstance(v, (list, tuple)):
-        return tuple(_norm_cell(x) for x in v)
-    return v
-
-
-def _norm_rows(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(_norm_cell(r[i]) for i in order) for r in rows]
-    out.sort(key=lambda t: tuple((x is None, str(x)) for x in t))
-    return [cols[i] for i in order], out
 
 
 def _spark_result(spark, key, sf_dir):
@@ -66,8 +38,8 @@ ROWS_ONLY = sorted(k for k in REGISTRY if REGISTRY[k].oracle is None)
 def test_oracle_match(spark, duck_small, key):
     s_cols, s_rows = _spark_result(spark, key, SF_SMALL)
     d_cols, d_rows = _duck_result(duck_small, key)
-    s_cols, s_norm = _norm_rows(s_cols, s_rows)
-    d_cols, d_norm = _norm_rows(d_cols, d_rows)
+    s_cols, s_norm = norm_rows(s_cols, s_rows)
+    d_cols, d_norm = norm_rows(d_cols, d_rows)
     assert s_cols == d_cols, f"{key}: column names differ: {s_cols} vs {d_cols}"
     assert len(s_norm) == len(d_norm), (
         f"{key}: row count {len(s_norm)} (spark) vs {len(d_norm)} (duckdb)"

@@ -8,8 +8,9 @@ from __future__ import annotations
 
 import re
 
-from conftest import SF_SMALL, register_views
+from conftest import SF_SMALL
 
+from googleanalytics_etl_spark.oracle import register_views
 from googleanalytics_etl_spark.registry import REGISTRY, oracle_sql, queries
 
 

@@ -9,7 +9,8 @@ string (``null`` for rows-only keys).
 
 An intended change (a new key, a rewritten oracle, a new rotation) is
 re-pinned with ``python tests/test_registry_pin.py`` and reviewed as a
-diff of that file.
+diff of that file. The order itself is computed from the evidence ledger
+(registry.py docstring), never from registration order.
 """
 
 from __future__ import annotations
@@ -17,12 +18,19 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import random
 import sys
 from pathlib import Path
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from googleanalytics_etl_spark.registry import oracle_sql, queries  # noqa: E402
+from googleanalytics_etl_spark.ledger import gather  # noqa: E402
+from googleanalytics_etl_spark.registry import (  # noqa: E402
+    _REWRITTEN,
+    driver_order,
+    oracle_sql,
+    queries,
+)
 
 PIN = Path(__file__).with_name("registry_pin.json")
 
@@ -48,6 +56,17 @@ def test_driver_order_and_oracles_pinned():
     )
     moved = [k for (k, h), (_, p) in zip(now, pinned) if h != p]
     assert not moved, f"oracle_sql() changed for {moved}"
+
+
+def test_driver_order_is_a_function_of_the_ledger():
+    """Registration order cannot move the window: the registered keys fed
+    in any order come back in ``queries()`` order; with no ledger they
+    come back as the rewritten keys, then the rest, each by name."""
+    keys = list(queries())
+    shuffled = random.Random(11).sample(keys, len(keys))
+    assert driver_order(shuffled, gather()[0]) == keys
+    head = sorted(k for k in keys if k in _REWRITTEN)
+    assert driver_order(shuffled, {}) == head + sorted(set(keys) - set(head))
 
 
 if __name__ == "__main__":

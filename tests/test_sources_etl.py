@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import shutil
 from pathlib import Path
 
 import pytest
@@ -20,14 +19,10 @@ from googleanalytics_etl_spark.sources import (
     write_partitioned,
 )
 
-SCRATCH = Path(__file__).resolve().parents[1] / ".scratch" / "test_sources"
 
-
-@pytest.fixture(autouse=True, scope="module")
-def _clean_scratch():
-    shutil.rmtree(SCRATCH, ignore_errors=True)
-    SCRATCH.mkdir(parents=True, exist_ok=True)
-    yield
+@pytest.fixture(scope="module")
+def scratch_dir(tmp_path_factory):
+    return tmp_path_factory.mktemp("test_sources")
 
 
 def test_paged_source_matches_batch_scan(spark):
@@ -46,11 +41,11 @@ def test_paged_source_pages_are_bounded(spark):
     assert paged.count() == load(spark, SF_SMALL, "events").count()
 
 
-def test_json_csv_roundtrip(spark):
+def test_json_csv_roundtrip(spark, scratch_dir):
     from pyspark.sql import functions as F
 
     e = load(spark, SF_SMALL, "events").limit(200)
-    jdir, cdir = str(SCRATCH / "ev_json"), str(SCRATCH / "ev_csv")
+    jdir, cdir = str(scratch_dir / "ev_json"), str(scratch_dir / "ev_csv")
     e.write.mode("overwrite").json(jdir)
     e.withColumn("props", F.lit(None).cast("string")).write.mode(
         "overwrite"
@@ -61,9 +56,9 @@ def test_json_csv_roundtrip(spark):
     assert dict(back.dtypes)["ts"] == "timestamp_ntz"
 
 
-def test_upsert_append_is_idempotent(spark):
+def test_upsert_append_is_idempotent(spark, scratch_dir):
     e = load(spark, SF_SMALL, "events").select("event_id", "user_id", "value")
-    tgt = str(SCRATCH / "upsert_tgt")
+    tgt = str(scratch_dir / "upsert_tgt")
     assert upsert_append(spark, e, tgt, "event_id") == e.count()
     assert upsert_append(spark, e, tgt, "event_id") == 0  # re-run: no-op
     extra = e.withColumn("event_id", e.event_id + 10_000_000)
@@ -139,7 +134,7 @@ def test_upsert_append_prunes_to_touched_buckets(spark, tmp_path):
     )[1].split("\n")[0]
 
 
-def test_upsert_append_merge_exercise_sf01_skewed(spark):
+def test_upsert_append_merge_exercise_sf01_skewed(spark, scratch_dir):
     """MERGE-semantics exercise at sf0.1: a 1M-row target upserted with a
     half-overlapping increment delivered as ONE partition (worst-case
     input skew for the anti-join). Exactly the fresh rows append, and a
@@ -152,7 +147,7 @@ def test_upsert_append_merge_exercise_sf01_skewed(spark):
         pytest.skip("sf0.1 fixtures absent")
     e = load(spark, sf01, "events").select("event_id", "user_id", "value")
     n = e.count()
-    tgt = str(SCRATCH / "upsert_sf01")
+    tgt = str(scratch_dir / "upsert_sf01")
     assert upsert_append(spark, e, tgt, "event_id") == n
     # increment: 50% already-loaded rows + 10k genuinely new ids, all in
     # a single input partition
@@ -164,9 +159,9 @@ def test_upsert_append_merge_exercise_sf01_skewed(spark):
     assert spark.read.parquet(tgt).count() == n + 10_000
 
 
-def test_write_partitioned_prunes(spark):
+def test_write_partitioned_prunes(spark, scratch_dir):
     d = load(spark, SF_SMALL, "documents")
-    out = str(SCRATCH / "docs_by_lang")
+    out = str(scratch_dir / "docs_by_lang")
     write_partitioned(d, out, "lang")
     assert (Path(out) / "lang=en").exists()
     one = spark.read.parquet(out).where("lang = 'en'")
@@ -190,7 +185,7 @@ def test_decode_media_is_stubbed():
         decode_media(b"\x89PNG", "image/png")
 
 
-def test_sync_pipeline_incremental(spark):
+def test_sync_pipeline_incremental(spark, scratch_dir):
     """The reference's EP1/EP2 semantics: backfill, idempotent re-sync,
     incremental tail append with re-extract overlap."""
     from pyspark.sql import functions as F
@@ -199,7 +194,7 @@ def test_sync_pipeline_incremental(spark):
     cutoff = F.lit("2024-01-20").cast("timestamp_ntz")
     history, tail = e.where(F.col("ts") < cutoff), e.where(F.col("ts") >= cutoff)
 
-    pipe = SyncPipeline(spark, EXAMPLE_CONFIG, str(SCRATCH / "sync_tgt"))
+    pipe = SyncPipeline(spark, EXAMPLE_CONFIG, str(scratch_dir / "sync_tgt"))
     n0 = pipe.backfill(history)
     assert n0 == history.count()
 
@@ -243,14 +238,14 @@ def test_paged_source_filter_pushdown(spark):
     assert 0 < rows < rows_full, "server-side filter did not reduce the page"
 
 
-def test_materialize_reports(spark):
+def test_materialize_reports(spark, scratch_dir):
     """EP3 derived tables: correct contents, pruned layouts."""
     from pyspark.sql import functions as F
 
     from googleanalytics_etl_spark.reports import materialize_reports
 
     e = load(spark, SF_SMALL, "events")
-    paths = materialize_reports(spark, e, str(SCRATCH / "reports"))
+    paths = materialize_reports(spark, e, str(scratch_dir / "reports"))
 
     sessions = spark.read.parquet(paths["sessions"])
     from googleanalytics_etl_spark.registry import queries

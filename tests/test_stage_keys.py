@@ -2,19 +2,23 @@
 
 Two fixtures in directories that share a basename must each read their
 own staged copy: a stage keyed on the basename alone hands the second
-fixture the first one's rows.
+fixture the first one's rows. A stage of a superseded source version
+is removed once it has gone unused for the sweep grace.
 """
 
 from __future__ import annotations
 
+import os
 import shutil
+import time
 
 import duckdb
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from conftest import SF_SMALL, register_views
+from conftest import SF_SMALL
 
-from googleanalytics_etl_spark import TABLES
+from googleanalytics_etl_spark import TABLES, scratch
+from googleanalytics_etl_spark.oracle import register_views
 from googleanalytics_etl_spark.registry import oracle_sql, queries
 from googleanalytics_etl_spark.scratch import SCRATCH
 
@@ -67,3 +71,27 @@ def test_same_basename_fixtures_read_their_own_stage(spark, tmp_path):
         for kind in _KEYS.values():
             for stage in (SCRATCH / kind).glob(f"{_TWIN}_*"):
                 shutil.rmtree(stage, ignore_errors=True)
+
+
+def test_stage_removes_superseded_siblings(tmp_path, monkeypatch):
+    """A stage rebuilt from a new version of its source removes the old
+    version's stage once that has gone unused for the sweep grace."""
+    monkeypatch.setattr(scratch, "SCRATCH", tmp_path / "scratch")
+    sf_dir = tmp_path / "sf_sweep"
+    sf_dir.mkdir()
+    src = sf_dir / "nation.parquet"
+    shutil.copy(f"{SF_SMALL}/nation.parquet", src)
+
+    def build(tmp):
+        shutil.copy(src, tmp / "nation.parquet")
+
+    first = scratch.stage("sweep", str(sf_dir), "nation", build)
+    pq.write_table(pq.read_table(src).slice(0, 5), src)  # the source's second version
+    second = scratch.stage("sweep", str(sf_dir), "nation", build)
+    assert second != first
+    assert first.exists(), "a sibling inside the grace was swept"
+
+    aged = time.time() - scratch.SWEEP_GRACE_S - 60
+    os.utime(first, (aged, aged))
+    assert scratch.stage("sweep", str(sf_dir), "nation", build) == second
+    assert sorted(second.parent.iterdir()) == [second]

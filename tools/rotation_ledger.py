@@ -1,17 +1,15 @@
-"""Generate the per-key driver-evidence ledger from CORRECTNESS_r*.json.
+"""Render the per-key driver-evidence ledger from CORRECTNESS_r*.json.
 
 Writes LEDGER.md: one row per registered key with the last official
 round whose driver window hash-certified it (or rows-only / never),
-so evidence staleness is visible at a glance and the next round's
-window rotation can be chosen mechanically (oldest evidence first).
+in ``queries()`` order, which the registry computes from the same
+ledger (``googleanalytics_etl_spark.ledger.gather``).
 
 Usage: python tools/rotation_ledger.py   # rewrites LEDGER.md in repo root
 """
 
 from __future__ import annotations
 
-import json
-import re
 import sys
 from pathlib import Path
 
@@ -19,44 +17,8 @@ ROOT = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(ROOT))
 
 
-def gather() -> tuple[dict[str, tuple[int, str]], list[int]]:
-    """Map key -> (round, status) for the LATEST round that checked it.
-
-    status: 'hash' (rows+schema+hash all true), 'rows' (rows true but
-    no hash — the rows-only protocol), 'fail' (driver ran it and
-    something mismatched or errored).
-    """
-    latest: dict[str, tuple[int, str]] = {}
-    rounds = []
-    for f in sorted(ROOT.glob("CORRECTNESS_r*.json")):
-        m = re.search(r"r(\d+)", f.name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        rounds.append(rnd)
-        try:
-            data = json.loads(f.read_text())
-        except json.JSONDecodeError:
-            continue
-        for key, res in data.items():
-            if not isinstance(res, dict):
-                continue
-            if res.get("hash_match"):
-                status = "hash"
-            elif res.get("err") == "no_oracle" and res.get("spark_rows"):
-                # rows-only protocol: no cross-engine oracle exists; the
-                # driver records spark_rows and null matches
-                status = "rows"
-            else:
-                status = "fail"
-            prev = latest.get(key)
-            # prefer the newest round; within a round prefer pass info
-            if prev is None or rnd >= prev[0]:
-                latest[key] = (rnd, status)
-    return latest, rounds
-
-
 def main() -> None:
+    from googleanalytics_etl_spark.ledger import gather
     from googleanalytics_etl_spark.registry import REGISTRY, queries
 
     order = list(queries())  # driver order: current window first
